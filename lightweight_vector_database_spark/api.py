@@ -19,6 +19,14 @@ Architecture (deliberately two-tier, like a real database):
   find_k_nearest_neighbors compiles to the same filter -> distance
   expression -> TakeOrderedAndProject plan as operators/knn.py, with
   cell pruning via plans/grid_index.py.
+- the snapshot and its index metadata are built on the DRIVER, from
+  data the memtable already holds: one Arrow ``createDataFrame``
+  ships the rows, ``GridIndex.cells_of`` (the numpy twin of
+  ``cell_expr``, bit-identical ids) computes ``cell_id``, and the
+  per-cell counts come from that same id array, counted after the
+  filter for filtered reads. No Spark job runs to build or describe
+  the snapshot, so a read (the first after a write included) runs
+  only the job that answers it. Queries still run in Spark.
 
 For data that does NOT fit a driver (the 100 TB path), use the
 DataFrame-native operators directly (operators/, plans/) — this facade
@@ -49,7 +57,7 @@ from pyspark.sql import functions as F
 
 from .functions.distance import METRICS
 from .operators.knn import knn
-from .plans.grid_index import GridIndex, build_index, index_stats, knn_indexed
+from .plans.grid_index import GridIndex, index_stats, knn_indexed
 
 T = TypeVar("T")
 
@@ -136,6 +144,9 @@ class SparkVectorDatabase(Generic[T]):
         self._store: dict[int, tuple[np.ndarray, T]] = {}
         self._next_id = 0
         self._df: DataFrame | None = None  # invalidated on mutation
+        # id-ordered vec_id / cell_id arrays of the snapshot in _df
+        self._ids = np.empty(0, dtype=np.int64)
+        self._cells = np.empty(0, dtype=np.int64)
         self._stats: dict[int, int] | None = None
 
     # --- reference API -------------------------------------------------
@@ -175,16 +186,24 @@ class SparkVectorDatabase(Generic[T]):
 
         df = self._dataframe()
         pred = None
+        stats = self._cell_stats()
         if filter is not None:
             # metadata filter runs before top-k (kd_tree_database.py
             # :186-190, :294-297). Arbitrary-callable filters can't be
             # compiled to Catalyst -> pre-evaluate per id (driver-side
             # metadata store, exactly like the reference's id->entry
-            # closure) and push the resulting id set as an IN filter.
-            ok_ids = [i for i, (_, m) in self._store.items() if filter(m)]
-            if not ok_ids:
+            # closure) and push the resulting id set as ONE SQL IN
+            # expression (the vec_lit idiom: one F.expr call instead of
+            # a py4j literal per id).
+            keep = np.fromiter(
+                (bool(filter(self._store[i][1])) for i in self._ids.tolist()),
+                dtype=bool, count=len(self._ids),
+            )
+            if not keep.any():
                 return []
-            pred = F.col("vec_id").isin(ok_ids)
+            ok_ids = ",".join(str(i) for i in self._ids[keep].tolist())
+            pred = F.expr(f"vec_id IN ({ok_ids})")
+            stats = _counts(self._cells[keep])
 
         if metric.prunable and not metric.kwargs:
             out = knn_indexed(
@@ -193,7 +212,7 @@ class SparkVectorDatabase(Generic[T]):
                 probe,
                 k,
                 metric=metric.name,
-                stats=self._cell_stats(),
+                stats=stats,
                 pred=pred,
             )
         else:
@@ -249,10 +268,13 @@ class SparkVectorDatabase(Generic[T]):
 
     def _debug_compute_length_from_tree(self) -> int:
         """Count via the index instead of the store (:318-319) — the
-        cross-structure consistency invariant."""
+        cross-structure consistency invariant. Counts the Spark
+        snapshot with a job (``index_stats``), not the driver-side
+        metadata, so the invariant checks the engine against the
+        memtable rather than the memtable against itself."""
         if not self._store:
             return 0
-        return sum(self._cell_stats().values())
+        return sum(index_stats(self._dataframe()).values())
 
     # --- internals -------------------------------------------------------
 
@@ -267,21 +289,47 @@ class SparkVectorDatabase(Generic[T]):
         self._df = None
         self._stats = None
 
+    def _memtable(self) -> tuple[np.ndarray, np.ndarray]:
+        """(ids, float32 vectors) of the memtable, in id order."""
+        ids = np.array(sorted(self._store), dtype=np.int64)
+        X = np.empty((len(ids), self._dim), dtype=np.float32)
+        for row, i in enumerate(ids.tolist()):
+            X[row] = self._store[i][0]
+        return ids, X
+
+    def _memtable_df(
+        self, ids: np.ndarray, X: np.ndarray, name: str, values: Any, ddl: str
+    ) -> DataFrame:
+        """(vec_id, embedding, ``name``) as ONE Arrow
+        ``createDataFrame``; ``values`` is the extra column, typed
+        ``ddl``."""
+        import pyarrow as pa
+
+        offsets = np.arange(0, X.size + 1, self._dim, dtype=np.int32)
+        table = pa.table(
+            {
+                "vec_id": ids,
+                "embedding": pa.ListArray.from_arrays(offsets, X.ravel()),
+                name: values,
+            }
+        )
+        return self._spark.createDataFrame(
+            table, f"vec_id long, embedding array<float>, {name} {ddl}"
+        )
+
     def _dataframe(self) -> DataFrame:
         if self._df is None:
-            rows = [
-                (i, [float(x) for x in pos])
-                for i, (pos, _) in sorted(self._store.items())
-            ]
-            base = self._spark.createDataFrame(
-                rows, "vec_id long, embedding array<float>"
-            )
-            self._df = build_index(base, self._index).cache()
+            self._ids, X = self._memtable()
+            self._cells = self._index.cells_of(X)
+            self._df = self._memtable_df(
+                self._ids, X, "cell_id", self._cells, "long"
+            ).cache()
         return self._df
 
     def _cell_stats(self) -> dict[int, int]:
         if self._stats is None:
-            self._stats = index_stats(self._dataframe())
+            self._dataframe()
+            self._stats = _counts(self._cells)
         return self._stats
 
     # --- bridge to the DataFrame-native engine ---------------------------
@@ -301,13 +349,9 @@ class SparkVectorDatabase(Generic[T]):
 
         from .sources.snapshots import SnapshotStore
 
-        rows = [
-            (i, [float(x) for x in pos], bytearray(pickle.dumps(meta)))
-            for i, (pos, meta) in sorted(self._store.items())
-        ]
-        df = self._spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, metadata binary"
-        )
+        ids, X = self._memtable()
+        metas = [pickle.dumps(self._store[i][1]) for i in ids.tolist()]
+        df = self._memtable_df(ids, X, "metadata", metas, "binary")
         store = SnapshotStore(self._spark, path)
         version = store.commit(df)
         self._save_config(path)
@@ -378,3 +422,9 @@ class SparkVectorDatabase(Generic[T]):
             db._store[r.vec_id] = (pos, pickle.loads(bytes(r.metadata)))
         db._next_id = max(cfg["next_id"], (max(db._store) + 1) if db._store else 0)
         return db
+
+
+def _counts(cells: np.ndarray) -> dict[int, int]:
+    """Per-cell row counts of a cell-id array (``index_stats``'s shape)."""
+    u, n = np.unique(cells, return_counts=True)
+    return dict(zip(u.tolist(), n.tolist()))

@@ -410,6 +410,37 @@ def knn_join_matmul(
     )
 
 
+def block_grid(n_p: int, n_b: int, par: int) -> tuple[int, int]:
+    """The (P, B) probe x base block grid ``knn_join_blocks`` tiles
+    by default, from the two row counts and the parallelism. Callers
+    that already know both counts (knn_join_bulk's futility route)
+    size the grid here and pass it as ``n_probe_blocks`` /
+    ``n_base_blocks``, so no count job runs."""
+    import math
+
+    # memory floors: each block must fit a task (~65k rows ~ 35 MB
+    # at dim 64)
+    P_min = max(1, math.ceil(n_p / MATMUL_MAX_DRIVER_PROBES))
+    B_min = max(1, math.ceil(n_b / MATMUL_MAX_DRIVER_PROBES))
+    if P_min * B_min >= par:
+        # the memory floors alone give the scheduler enough groups
+        return P_min, B_min
+    # split the extra parallelism between the two sides to MINIMIZE
+    # the replicated shuffle volume |probes|*B + |base|*P subject to
+    # P*B >= defaultParallelism (each side replicates across the
+    # other's blocks). The old rule put the whole parallelism factor
+    # on B, which shipped |probes| x par rows whenever the base was
+    # small: measured 320k probe-vector copies (~166 MB) for the
+    # 10^4-probe ladder over a 2k-row base, vs ~56k rows for the
+    # balanced split. Continuous optimum of the relaxation is
+    # P = sqrt(par * n_p / n_b); clamp to the floors and to the row
+    # counts so neither side splits beyond its rows.
+    P = int(round(math.sqrt(par * n_p / max(1, n_b))))
+    P = max(P_min, min(P, par, max(1, n_p)))
+    B = max(B_min, min(math.ceil(par / P), max(1, n_b)))
+    return P, B
+
+
 def knn_join_blocks(
     probes: DataFrame,
     base: DataFrame,
@@ -474,29 +505,7 @@ def knn_join_blocks(
         P_min = max(1, math.ceil(probes.count() / MATMUL_MAX_DRIVER_PROBES))
         P = max(P_min, math.ceil(par / B))
     else:
-        # memory floors: each block must fit a task (~65k rows ~ 35 MB
-        # at dim 64)
-        n_p, n_b = probes.count(), base.count()
-        P_min = max(1, math.ceil(n_p / MATMUL_MAX_DRIVER_PROBES))
-        B_min = max(1, math.ceil(n_b / MATMUL_MAX_DRIVER_PROBES))
-        if P_min * B_min >= par:
-            # the memory floors alone give the scheduler enough groups
-            P, B = P_min, B_min
-        else:
-            # split the extra parallelism between the two sides to
-            # MINIMIZE the replicated shuffle volume |probes|*B +
-            # |base|*P subject to P*B >= defaultParallelism (each side
-            # replicates across the other's blocks). The old rule put
-            # the whole parallelism factor on B, which shipped
-            # |probes| x par rows whenever the base was small: measured
-            # 320k probe-vector copies (~166 MB) for the 10^4-probe
-            # ladder over a 2k-row base, vs ~56k rows for the balanced
-            # split. Continuous optimum of the relaxation is
-            # P = sqrt(par * n_p / n_b); clamp to the floors and to the
-            # row counts so neither side splits beyond its rows.
-            P = int(round(math.sqrt(par * n_p / max(1, n_b))))
-            P = max(P_min, min(P, par, max(1, n_p)))
-            B = max(B_min, min(math.ceil(par / P), max(1, n_b)))
+        P, B = block_grid(probes.count(), base.count(), par)
     inv_diag = metric_kwargs.get("inv_diag")
     keep_pad = 2 * k
 

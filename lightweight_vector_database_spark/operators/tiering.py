@@ -68,11 +68,15 @@ def seeded_probe_rows(
     return [(int(r[0]), [float(x) for x in r[1]]) for r in rows]
 
 
-def _probe_table(spark, probes: list[tuple[int, list[float]]], dim: int):
+def _probe_table(
+    spark, probes: list[tuple[int, list[float]]], dim: int, sign_words: bool = False
+):
     """The probe sample as a small broadcastable DataFrame
-    (__pid long, __pv array<double>, __pw0/__pw1 packed sign words).
-    The packed words replay hamming_rerank's driver-side probe packing
-    verbatim; unused columns are pruned by Catalyst per tier."""
+    (__pid long, __pv array<double>). With ``sign_words`` (the hamming
+    tier) it also carries __pw0/__pw1, the packed sign words, replaying
+    hamming_rerank's driver-side probe packing verbatim; packing splits
+    the dims into two equal halves, so an odd dim raises here instead
+    of silently dropping the last dim."""
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -81,22 +85,26 @@ def _probe_table(spark, probes: list[tuple[int, list[float]]], dim: int):
         StructType,
     )
 
-    half = dim // 2
-    rows = []
-    for pid, vec in probes:
-        vec = [float(x) for x in vec]
-        p0 = sum(1 << i for i in range(half) if vec[i] > 0)
-        p1 = sum(1 << i for i in range(half) if vec[half + i] > 0)
-        rows.append((int(pid), vec, p0, p1))
-    schema = StructType(
-        [
-            StructField("__pid", LongType(), False),
-            StructField("__pv", ArrayType(DoubleType(), False), False),
+    fields = [
+        StructField("__pid", LongType(), False),
+        StructField("__pv", ArrayType(DoubleType(), False), False),
+    ]
+    rows = [(int(pid), [float(x) for x in vec]) for pid, vec in probes]
+    if sign_words:
+        if dim % 2 != 0:
+            raise ValueError(f"sign packing needs an even dim, got {dim}")
+        half = dim // 2
+        rows = [
+            (pid, vec,
+             sum(1 << i for i in range(half) if vec[i] > 0),
+             sum(1 << i for i in range(half) if vec[half + i] > 0))
+            for pid, vec in rows
+        ]
+        fields += [
             StructField("__pw0", LongType(), False),
             StructField("__pw1", LongType(), False),
         ]
-    )
-    return spark.createDataFrame(rows, schema)
+    return spark.createDataFrame(rows, StructType(fields))
 
 
 def _topk_per_probe(
@@ -165,7 +173,7 @@ def _topk_union(
     from .retrieval import binary_quantize
 
     spark = df.sparkSession
-    pdf = F.broadcast(_probe_table(spark, probes, dim))
+    pdf = F.broadcast(_probe_table(spark, probes, dim, tier == "hamming"))
     par = spark.sparkContext.defaultParallelism
     # enough local groups that probes x groups covers the cluster;
     # scale-adaptive (follows defaultParallelism), never a constant

@@ -9,6 +9,15 @@ probe table stays a DataFrame end to end.
 
 Plan shape (``knn_join_bulk``):
 
+0. **Futility from metadata only.** The grid geometry alone (per-cell
+   boxes, no table access) can show that no cell is ever pruned: the
+   largest cell lower bound any in-bounds probe can see is at most the
+   smallest kth upper bound. Such calls (high ambient dimension over
+   a shallow grid) go straight to the distributed block join
+   (``operators.knn.knn_join_blocks``), sized from the probe count and
+   the ``stats`` row total, without deriving candidates first. The
+   only job before the join is the probe count, which also rejects
+   duplicate probe ids on every route.
 1. **Candidate derivation, distributed.** ``mapInPandas`` over the
    probe table. The task closure carries only the index *metadata* —
    the GridIndex geometry plus the per-cell row counts — which is
@@ -46,9 +55,8 @@ Reference semantics: find_k_nearest_neighbors per probe row
 
 Cost model at 100 TB: the base is scanned once (pruned to candidate
 cells), shuffled once (by cell/salt key), and the probe table is
-scanned three times (cell prune, cogroup, redo anti-join) — probe
-tables are orders of magnitude smaller than the corpus, so three probe
-scans beat one driver materialization at any realistic scale.
+scanned once into a persisted projection that serves the count, the
+derivation, the vector re-attach and the redo anti-join.
 """
 
 from __future__ import annotations
@@ -59,7 +67,12 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.knn import NP_METRICS, matmul_tie_thresholds, np_dists
+from ..operators.knn import (
+    NP_METRICS,
+    block_grid,
+    matmul_tie_thresholds,
+    np_dists,
+)
 from .grid_index import GridIndex, index_stats
 
 
@@ -69,6 +82,32 @@ DEFAULT_PROBE_CHUNK = 4_096
 # applyInPandas group materializes as one Arrow buffer, so this times
 # (vector bytes) bounds the probe half of task memory (~9 MB at dim 64)
 DEFAULT_PROBE_GROUP_ROWS = 16_384
+
+
+def _probe_count(probes: DataFrame, probe_id_col: str) -> int:
+    """Row count of ``probes``, checking that probe ids are unique:
+    every per-probe window (and the vector re-attach join) assumes
+    they are. One rollup aggregate yields both the per-id counts and
+    the grand total, so the check costs no job over a plain count
+    (``count`` + ``countDistinct`` would plan a second exchange, and
+    AQE runs each exchange as its own job). Raises ValueError naming
+    the first few duplicated ids."""
+    rows = (
+        probes.rollup(probe_id_col)
+        .agg(F.count(F.lit(1)).alias("n"), F.grouping_id().alias("grand"))
+        .filter((F.col("grand") == 1) | (F.col("n") > 1))
+        .orderBy(F.col("grand").desc(), probe_id_col)
+        .limit(6)
+        .collect()
+    )
+    dups = [r[probe_id_col] for r in rows if r["grand"] == 0]
+    if dups:
+        raise ValueError(
+            f"knn_join_bulk needs unique {probe_id_col} values; "
+            f"duplicated: {dups[:5]}"
+        )
+    # an empty input has no grand-total row
+    return int(rows[0]["n"]) if rows else 0
 
 
 def knn_join_bulk(
@@ -98,7 +137,9 @@ def knn_join_bulk(
     probes); unlike those, never materializes a probe vector on the
     driver.
     """
-    from ..operators.knn import knn_join
+    # imported per call: tests patch operators.knn.knn_join_blocks to
+    # observe the routing
+    from ..operators.knn import knn_join, knn_join_blocks
 
     spark = assigned.sparkSession
     if not GridIndex.supports(metric) or metric not in NP_METRICS:
@@ -138,6 +179,18 @@ def knn_join_bulk(
     lo_fin, hi_fin = index.cell_boxes(cells.tolist(), extended=False)
     derive_chunk = 256  # bounds tensor is chunk x cells x dim doubles
 
+    def _reduce(t: np.ndarray) -> np.ndarray:
+        """The metric over non-negative per-dim terms (last axis)."""
+        if metric == "euclidean_sq":
+            return (t**2).sum(-1)
+        if metric == "manhattan":
+            return t.sum(-1)
+        if metric == "chebyshev":
+            return t.max(-1)
+        if metric == "mahalanobis_diag":
+            return (inv_diag_arr * t**2).sum(-1)
+        raise KeyError(metric)
+
     def _bounds(P: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(lb, ub) matrices (probes x cells) for a probe chunk —
         same box formulas as GridIndex.lower/upper_bound_dists."""
@@ -150,16 +203,30 @@ def knn_join_bulk(
             np.abs(lo_fin[None, :, :] - P[:, None, :]),
             np.abs(hi_fin[None, :, :] - P[:, None, :]),
         )
-        if metric == "euclidean_sq":
-            return (gaps**2).sum(-1), (far**2).sum(-1)
-        if metric == "manhattan":
-            return gaps.sum(-1), far.sum(-1)
-        if metric == "chebyshev":
-            return gaps.max(-1), far.max(-1)
-        if metric == "mahalanobis_diag":
-            w = inv_diag_arr[None, None, :]
-            return (w * gaps**2).sum(-1), (w * far**2).sum(-1)
-        raise KeyError(metric)
+        return _reduce(gaps), _reduce(far)
+
+    # ---- 0. futility from geometry alone -------------------------------
+    # For a probe inside the index bounds [L, U], a cell's lower bound
+    # is at most the metric over max(lo - L, U - hi) on its finite box
+    # (unsplit dims add 0), and every kth upper bound is at least the
+    # smallest metric over half the cell widths (the farthest corner is
+    # never nearer than half the box). When the first never exceeds the
+    # second, every cell is a candidate for every probe, the futility
+    # ratio below would come out 1, and the candidate pass, its persist
+    # and its count only reach the block join the grid already implies.
+    # Probes outside the bounds may prune; the block join answers them
+    # exactly all the same.
+    prunes_nothing = _reduce(
+        np.maximum(lo_fin - index.lower, index.upper - hi_fin)
+    ).max() <= _reduce((hi_fin - lo_fin) / 2).min()
+    if prunes_nothing and futility_ratio <= 1:
+        n_probes = _probe_count(probes, probe_id_col)
+        P, B = block_grid(n_probes, total, spark.sparkContext.defaultParallelism)
+        return knn_join_blocks(
+            probes, assigned, k, metric=metric, probe_id_col=probe_id_col,
+            probe_vec_col=probe_vec_col, vec_col=vec_col, id_col=id_col,
+            n_probe_blocks=P, n_base_blocks=B, **metric_kwargs,
+        )
 
     # ---- 1. distributed candidate derivation -------------------------
     # candidates carry IDS AND BOUNDS ONLY (guide §2.3/§8: shuffle
@@ -256,11 +323,15 @@ def knn_join_bulk(
     # join and the redo anti-join (it was re-executed per consumer
     # before — 3 scans pinned by test_bulk_derivation_runs_once, now 1).
     # MEMORY_AND_DISK: bounded by n_probes x dim, spills gracefully.
-    pvecs = register_cache(
-        probes.select(probe_id_col, probe_vec_col).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    pvecs = probes.select(probe_id_col, probe_vec_col).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
+    try:
+        n_probes = _probe_count(pvecs, probe_id_col)
+    except ValueError:
+        pvecs.unpersist()
+        raise
+    register_cache(pvecs)
     cand = register_cache(
         pvecs.mapInPandas(derive, cand_schema).persist(StorageLevel.DISK_ONLY)
     )
@@ -317,18 +388,15 @@ def knn_join_bulk(
     # collected, O(cells)) expose this for metadata cost: if the mean
     # candidate set covers more than ``futility_ratio`` of the cells,
     # the distributed block-tiled brute join is strictly cheaper —
-    # route there. One count on the cached probe projection prices the
-    # ratio.
-    n_probes = pvecs.count()
+    # route there. The probe count taken above prices the ratio.
     total_cand = sum(cand_counts.values())
     if n_probes and total_cand >= futility_ratio * n_probes * len(cells):
-        from ..operators.knn import knn_join_blocks
-
         cand.unpersist()
+        P, B = block_grid(n_probes, total, spark.sparkContext.defaultParallelism)
         return knn_join_blocks(
             pvecs, assigned, k, metric=metric, probe_id_col=probe_id_col,
             probe_vec_col=probe_vec_col, vec_col=vec_col, id_col=id_col,
-            **metric_kwargs,
+            n_probe_blocks=P, n_base_blocks=B, **metric_kwargs,
         )
     # psalt floor (guide §2.5 "too few distinct partitioning keys"):
     # with few candidate cells and byte-sized npsalt at 1, the Python

@@ -135,6 +135,31 @@ class GridIndex:
             cell = cell * self.bins + digit
         return cell
 
+    def cells_of(self, points: np.ndarray) -> np.ndarray:
+        """``cell_expr`` evaluated on the driver: the fixed-depth cell
+        id of each row of ``points`` (n x dim). Every level repeats the
+        expression's IEEE double operations (float32 widens exactly,
+        as the Spark cast does), so the ids equal ``build_index``'s bit
+        for bit. Spark orders NaN above every number, so a NaN
+        coordinate fails ``norm < 0``, passes ``norm >= 1`` and lands
+        in the last bin; the masks below keep that order."""
+        X = np.asarray(points, dtype=np.float64).reshape(-1, self.dim)
+        cell = np.zeros(len(X), dtype=np.int64)
+        for level in range(self.depth):
+            d = level % self.dim
+            j = level // self.dim
+            lo, hi = float(self.lower[d]), float(self.upper[d])
+            norm = (X[:, d] - lo) / (hi - lo)
+            low = norm < 0
+            inside = ~low & (norm < 1)  # False for NaN, like Spark's >= 1
+            scaled = np.floor(np.where(inside, norm, 0.0) * float(self.bins ** (j + 1)))
+            digit = np.where(
+                inside, scaled.astype(np.int64) % self.bins,
+                np.where(low, 0, self.bins - 1),
+            )
+            cell = cell * self.bins + digit
+        return cell
+
     # --- query side (driver-local geometry, no Spark) -------------------
 
     def _digits(self, cell_ids: np.ndarray) -> np.ndarray:
@@ -513,6 +538,14 @@ def knn_indexed(
     back to the exact full scan if invalidated (clamped out-of-bounds
     rows; metadata ``pred`` thinning the counted cells below k). The
     pred applies before top-k (reference leaf filter, :186-190).
+
+    When the metadata says a two-pass rescan would cover most rows
+    anyway, two sequential jobs cannot beat one full scan, so the
+    exact brute scan answers directly; this holds with or without
+    ``pred``, since the brute scan applies it too. With ``pred``, pass
+    ``stats`` counted AFTER the filter (the ``code_stats`` contract of
+    ``ann_join_topk``): those counts keep the geometric bound valid
+    and size the candidate sets to the rows the query can return.
     """
     if not GridIndex.supports(metric):
         # custom / full-matrix metric without a closed-form cell bound:
@@ -604,7 +637,7 @@ def knn_indexed(
     # prunes, e.g. clustered data at >= 500k rows, tools/scale_test.py).
     bound_est = min(kth_ub, float(ub[order_lb[:n_pass1]].max()))
     est_rows = int(counts[lb <= bound_est].sum())
-    if pred is None and est_rows >= 0.5 * total:
+    if est_rows >= 0.5 * total:
         return knn(
             assigned, probe, k, metric=metric, pred=pred,
             vec_col=vec_col, id_col=id_col, **metric_kwargs,

@@ -294,3 +294,61 @@ def test_bulk_futility_fallback_routes_to_blocks(spark, fixture):
         knn_mod.knn_join_blocks = orig
     assert calls, "expected the futility fallback to route to knn_join_blocks"
     assert out == _canon(knn_join(probes, emb, k=3, strategy="window"))
+
+
+def _spy_blocks(monkeypatch):
+    import sys
+
+    knn_mod = sys.modules["lightweight_vector_database_spark.operators.knn"]
+    calls = []
+    orig = knn_mod.knn_join_blocks
+
+    def spy(*a, **kw):
+        calls.append(kw)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(knn_mod, "knn_join_blocks", spy)
+    return calls
+
+
+def test_bulk_geometry_futility_persists_nothing(spark, fixture, monkeypatch):
+    """On the dim-64 fixture (depth-6 grid: any in-bounds probe's
+    largest cell lower bound is 2.7, the smallest kth upper bound
+    14.7) the grid geometry alone shows that nothing prunes, so the
+    default futility_ratio routes to the block join without deriving
+    or persisting candidates, sized from the probe count and the stats
+    total; futility_ratio=1.01 keeps the cogroup path."""
+    from lightweight_vector_database_spark.caching import unpersist_caches
+    from lightweight_vector_database_spark.operators.knn import block_grid
+
+    emb, idx, assigned, stats, probes = fixture
+    unpersist_caches()
+    calls = _spy_blocks(monkeypatch)
+    out = _canon(knn_join_bulk(assigned, idx, probes, k=3, stats=stats))
+    assert unpersist_caches() == 0
+    par = spark.sparkContext.defaultParallelism
+    P, B = block_grid(probes.count(), emb.count(), par)
+    assert [(c["n_probe_blocks"], c["n_base_blocks"]) for c in calls] == [(P, B)]
+    assert out == _canon(knn_join(probes, emb, k=3, strategy="window"))
+
+    calls.clear()
+    pinned = _canon(
+        knn_join_bulk(assigned, idx, probes, k=3, stats=stats, futility_ratio=1.01)
+    )
+    assert not calls and unpersist_caches() >= 1
+    assert pinned == out
+
+
+@pytest.mark.parametrize("futility_ratio", [0.5, 1.01])
+def test_bulk_rejects_duplicate_probe_ids(spark, fixture, futility_ratio):
+    """Duplicate probe ids raise on both routes (blocks at the default
+    ratio, cogroup at 1.01), naming the duplicates, before any join."""
+    from lightweight_vector_database_spark.caching import unpersist_caches
+
+    emb, idx, assigned, stats, probes = fixture
+    dup = probes.unionByName(probes.filter(F.col("probe_id").isin(3, 11)))
+    with pytest.raises(ValueError, match=r"duplicated: \[3, 11\]"):
+        knn_join_bulk(
+            assigned, idx, dup, k=3, stats=stats, futility_ratio=futility_ratio
+        )
+    assert unpersist_caches() == 0

@@ -674,3 +674,41 @@ def test_cosine_through_index_equals_brute(spark, sf_dir, seed):
         .collect()
     ]
     assert got == brute
+
+
+def _spark_cells(spark, idx, X):
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(X)],
+        "vec_id long, embedding array<double>",
+    )
+    return [r.cell_id for r in build_index(df, idx).orderBy("vec_id").collect()]
+
+
+@pytest.mark.parametrize("dim,depth", [(4, 3), (3, 7), (2, 5)])
+def test_cells_of_equals_build_index(spark, dim, depth):
+    """GridIndex.cells_of (the driver-side numpy twin of cell_expr)
+    gives build_index's cell ids bit for bit: random points, points
+    exactly on bin edges and on the bounds, clamped out-of-bounds
+    points, depth > dim, and NaN coordinates."""
+    idx = GridIndex([-1.0] * dim, [2.0] * dim, num_splits=2, depth=depth)
+    rs = np.random.RandomState(dim * 10 + depth)
+    random = rs.uniform(-1.0, 2.0, (40, dim))
+    # every nested bin edge up to the deepest visit, plus both bounds
+    edges = -1.0 + 3.0 * np.arange(0, 28) / 27.0
+    on_edges = rs.choice(edges, (40, dim))
+    outside = rs.uniform(-4.0, 5.0, (40, dim))
+    special = np.array(
+        [[-1.0] * dim, [2.0] * dim, [np.nan] * dim, [np.inf] * dim, [-np.inf] * dim]
+    )
+    X = np.vstack([random, on_edges, outside, special]).astype(np.float32)
+    X[::7, 0] = np.nan
+    assert idx.cells_of(X).tolist() == _spark_cells(spark, idx, X)
+
+
+def test_cells_of_puts_nan_in_last_bin(spark):
+    """Spark orders NaN above every number, so a NaN coordinate lands
+    in the last bin: (NaN, 0.5) over [0, 1]^2, 2 splits, depth 3 is
+    digits (2, 1, 2) = cell 23 (a plain ``>= 1`` test would say 0)."""
+    idx = GridIndex([0.0, 0.0], [1.0, 1.0], num_splits=2, depth=3)
+    X = np.array([[np.nan, 0.5]])
+    assert idx.cells_of(X).tolist() == [23] == _spark_cells(spark, idx, X)

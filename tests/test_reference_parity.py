@@ -7,6 +7,8 @@ can switch' proof."""
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 import pytest
 
@@ -176,3 +178,64 @@ def test_load_refuses_oversized_snapshot(spark, rng, tmp_path, monkeypatch):
         SparkVectorDatabase.load(spark, path)
     monkeypatch.undo()
     assert len(SparkVectorDatabase.load(spark, path)) == 5
+
+
+def _count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran): the call runs in its own
+    job group, counted once the listener bus has delivered every job
+    event."""
+    sc = spark.sparkContext
+    group = f"count_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reads_run_one_job_each(spark):
+    """The snapshot, its cell ids and its per-cell counts are built on
+    the driver from the memtable, so a plain read, a filtered read and
+    the first read after a write each run exactly the one job that
+    answers them, and every answer matches brute force."""
+    rs = np.random.RandomState(7)
+    dim, n = 16, 600
+    db = SparkVectorDatabase(spark, dim, -np.ones(dim), np.ones(dim))
+    vecs = rs.uniform(-1, 1, (n, dim)).astype(np.float32)
+    ids = db.insert_many(list(vecs), [{"tag": i % 10} for i in range(n)])
+    rows = dict(zip(ids, vecs.astype(np.float64)))
+
+    def brute(p, keep):
+        cand = sorted(i for i in rows if keep(i))
+        d = np.array([((rows[i] - p) ** 2).sum() for i in cand])
+        order = np.lexsort((cand, d))[:5]
+        return [cand[j] for j in order], d[order]
+
+    def check(p, got, keep=lambda i: True):
+        want_ids, want_d = brute(p.astype(np.float64), keep)
+        by_pos = {rows[i].astype(np.float32).tobytes(): i for i in rows}
+        assert [by_pos[e.position.tobytes()] for e, _ in got] == want_ids
+        assert np.allclose([d for _, d in got], want_d, rtol=1e-12, atol=0)
+
+    probe = vecs[3]
+    db.find_k_nearest_neighbors(probe, 5)  # first read builds the snapshot
+    got, jobs = _count_jobs(spark, lambda: db.find_k_nearest_neighbors(probe, 5))
+    assert jobs == 1
+    check(probe, got)
+    got, jobs = _count_jobs(
+        spark, lambda: db.find_k_nearest_neighbors(probe, 5, filter=lambda m: m["tag"] == 3)
+    )
+    assert jobs == 1
+    check(probe, got, keep=lambda i: i % 10 == 3)
+    new = rs.uniform(-1, 1, dim).astype(np.float32)
+    rows[db.insert(new, {"tag": 0})] = new.astype(np.float64)
+    db.delete(ids[0])
+    del rows[ids[0]]
+    got, jobs = _count_jobs(spark, lambda: db.find_k_nearest_neighbors(new, 5))
+    assert jobs == 1
+    check(new, got)
+    # the cross-structure invariant still counts the Spark snapshot
+    _, jobs = _count_jobs(spark, db._debug_compute_length_from_tree)
+    assert jobs >= 1 and db._debug_compute_length_from_tree() == len(db) == n

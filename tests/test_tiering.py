@@ -721,3 +721,19 @@ def test_batched_topk_union_equals_per_probe_operators(spark, sf_dir):
             ).collect()
         }
         assert batched == reference(tier), tier
+
+
+def test_probe_table_sign_words_need_even_dim(spark):
+    """The packed sign words split the dims into two equal halves, so
+    they are built only for the hamming tier and an odd dim raises
+    there, instead of silently dropping the last dim; other tiers get
+    a probe table without them and keep working at any dim."""
+    from lightweight_vector_database_spark.operators.tiering import _probe_table
+
+    probes = [(0, [0.5, -0.25, 0.75]), (1, [-0.5, 0.25, -0.75])]
+    plain = _probe_table(spark, probes, 3)
+    assert plain.columns == ["__pid", "__pv"]
+    with pytest.raises(ValueError, match="even dim"):
+        _probe_table(spark, probes, 3, sign_words=True)
+    packed = _probe_table(spark, [(0, [0.5, -0.25, 0.75, 0.1])], 4, sign_words=True)
+    assert [tuple(r) for r in packed.select("__pw0", "__pw1").collect()] == [(1, 3)]
