@@ -39,6 +39,36 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Upper bound on waiting for a round's observed fingerprint. The wait
+# starts after the eager checkpoint job has finished, so only the
+# metrics' delivery through the listener bus remains; a Spark change
+# that stops posting them must fail the loop, not hang it.
+OBSERVATION_WAIT_S = 120
+
+
+def _observed_metrics(obs) -> dict:
+    """``obs.get`` with a deadline: waits on the JVM Observation's
+    future for at most ``OBSERVATION_WAIT_S`` seconds and raises
+    ``TimeoutError`` when the metrics never arrive."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = obs._jvm
+    try:
+        jvm.scala.concurrent.Await.ready(
+            obs._jo.future(),
+            jvm.scala.concurrent.duration.Duration.apply(
+                int(OBSERVATION_WAIT_S * 1000), "ms"
+            ),
+        )
+    except Py4JJavaError as exc:
+        if "TimeoutException" not in exc.java_exception.getClass().getName():
+            raise
+        raise TimeoutError(
+            f"observed metrics did not arrive within {OBSERVATION_WAIT_S}s "
+            "of the checkpoint job"
+        ) from None
+    return obs.get
+
 
 def _checkpoint_with_fingerprint(e: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
     """Eager localCheckpoint with the round's edge-set fingerprint
@@ -63,7 +93,7 @@ def _checkpoint_with_fingerprint(e: DataFrame) -> tuple[DataFrame, tuple[int, in
         F.count(F.lit(1)).alias("n"),
         F.coalesce(F.bit_xor(F.xxhash64("a", "b")), F.lit(0)).alias("h"),
     ).localCheckpoint(eager=True)
-    got = obs.get
+    got = _observed_metrics(obs)
     return out, (int(got["n"]), int(got["h"]))
 
 

@@ -51,7 +51,10 @@ def assign_clusters(
 
     def dist_to(c: list[float]) -> Column:
         # one F.expr literal instead of a dim-element F.lit chain
-        # (bit-identical values; see functions/distance.vec_lit)
+        # (bit-identical values; see functions/distance.vec_lit).
+        # try_element_at: a vector shorter than the centroid scores a
+        # null distance instead of an ANSI index error mid-job, so
+        # kmeans_fixed can reject it by length with a ValueError
         from ..functions.distance import vec_lit
 
         arr = vec_lit(c)
@@ -59,8 +62,8 @@ def assign_clusters(
             F.sequence(F.lit(1), F.lit(len(c))),
             F.lit(0.0),
             lambda acc, i: acc
-            + (F.element_at(v, i).cast("double") - F.element_at(arr, i))
-            * (F.element_at(v, i).cast("double") - F.element_at(arr, i)),
+            + (F.try_element_at(v, i).cast("double") - F.element_at(arr, i))
+            * (F.try_element_at(v, i).cast("double") - F.element_at(arr, i)),
         )
 
     dists = F.array(*[dist_to(c) for _, c in centroids])
@@ -96,6 +99,8 @@ def kmeans_fixed(
     init_rows = emb.orderBy(F.col(id_col).asc()).limit(k).collect()
     if len(init_rows) < k:
         raise ValueError(f"k={k} exceeds row count {len(init_rows)}")
+    if any(r[vec_col] is None for r in init_rows):
+        raise ValueError(f"{vec_col!r} holds null or empty vectors")
     actual_dim = len(init_rows[0][vec_col])
     if actual_dim != dim:
         # a silent mismatch is the worst failure mode here: round 1
@@ -120,11 +125,13 @@ def kmeans_fixed(
         # values — same rewrite as retrieval.sq8_train). Long addition
         # is order-independent, so the per-(cluster, dimension) sums
         # are EXACTLY the old per-column sums; the element cast is the
-        # identical float->double widening.
+        # identical float->double widening. posexplode_outer keeps a
+        # null or empty vector visible as an __i = null group, so the
+        # same collect validates every vector's length.
         sums = (
             assigned.select(
                 "j",
-                F.posexplode(F.col(vec_col).cast("array<double>")).alias(
+                F.posexplode_outer(F.col(vec_col).cast("array<double>")).alias(
                     "__i", "__x"
                 ),
             )
@@ -139,10 +146,20 @@ def kmeans_fixed(
         )
         by_j: dict[int, dict[int, tuple[int, int]]] = {}
         for r in sums:
+            if r["__i"] is None:
+                raise ValueError(f"{vec_col!r} holds null or empty vectors")
             by_j.setdefault(int(r["j"]), {})[int(r["__i"])] = (
                 int(r["s"]),
                 int(r["n"]),
             )
+        for j, d in by_j.items():
+            # a length-dim member adds one count to each of 0..dim-1
+            counts = {n for _, n in d.values()}
+            if sorted(d) != list(range(dim)) or len(counts) > 1:
+                raise ValueError(
+                    f"{vec_col!r} holds vectors whose length is not "
+                    f"dim={dim} (cluster {j})"
+                )
         cents = sorted(
             (j, [(d[i][0] / 1e6) / d[i][1] for i in range(dim)])
             for j, d in by_j.items()

@@ -666,180 +666,6 @@ def train_opq_np(
     return cents, R, books
 
 
-def zca_whitening_np(sample: np.ndarray, eps: float = 1e-5) -> np.ndarray:
-    """Symmetric (ZCA) whitening matrix from the training sample's
-    covariance: ``W = U diag(1/sqrt(lam + eps)) U^T``. Applied before
-    the COARSE stage (``train_whitened_ivfpq`` / ``ivfpq_encode(
-    whiten=)`` / ``ann_join_topk(whiten=)``) it equalizes the
-    residual variance spectrum, so Lloyd's k-means stops collapsing
-    onto the dominant variance directions — the r11 anisotropic mix
-    left 11 live coarse cells of 64 (ROUND11_NOTES), capping nprobe
-    headroom. ZCA (vs plain PCA whitening) keeps the transform as
-    close to identity as a whitening can be (Bell & Sejnowski's
-    symmetric form), so near-isotropic corpora are served almost
-    unchanged. Deterministic for a given sample (eigh on the
-    symmetric covariance)."""
-    X = np.asarray(sample, dtype=np.float64)
-    mu = X.mean(axis=0)
-    C = (X - mu).T @ (X - mu) / max(1, len(X) - 1)
-    lam, U = np.linalg.eigh(C)
-    lam = np.maximum(lam, 0.0)
-    return (U * (1.0 / np.sqrt(lam + eps))[None, :]) @ U.T
-
-
-def train_whitened_ivfpq_np(
-    sample: np.ndarray,
-    n_centroids: int = 32,
-    m: int = 8,
-    ksub: int = 256,
-    iters: int = 5,
-    seed: int = 42,
-    eps: float = 1e-5,
-    opq: bool = False,
-):
-    """Numpy core of ``train_whitened_ivfpq`` (same sample -> same
-    model, no Spark — the exact-oracle twin). The whitening is a
-    VECTOR-SPACE transform: coarse centroids, residuals and codebooks
-    all live in the whitened space, and serving (``ann_join_topk(
-    whiten=W)``) whitens probes with the same left-fold matvec before
-    assignment + ADC while the exact re-rank stays on the RAW vectors
-    — candidate selection geometry changes, the final metric does not.
-    Returns ``(W, cents, books)``, or ``(W, cents, rotation, books)``
-    with ``opq=True`` (the OPQ rotation is trained on the WHITENED
-    residuals — the composition the anisotropic axis measures)."""
-    X = np.asarray(sample, dtype=np.float64)
-    W = zca_whitening_np(X, eps=eps)
-    Xw = fold_matvec(X, W)
-    if opq:
-        cents, R, books = train_opq_np(
-            Xw, n_centroids=n_centroids, m=m, ksub=ksub, iters=iters,
-            seed=seed,
-        )
-        return W, cents, R, books
-    cents, books = train_ivfpq_np(
-        Xw, n_centroids=n_centroids, m=m, ksub=ksub, iters=iters, seed=seed
-    )
-    return W, cents, books
-
-
-def train_whitened_ivfpq(
-    df: DataFrame,
-    n_centroids: int = 32,
-    m: int = 8,
-    ksub: int = 256,
-    vec_col: str = "embedding",
-    iters: int = 5,
-    sample_rows: int = 8192,
-    seed: int = 42,
-    sample_id_col: str | None = None,
-    eps: float = 1e-5,
-    opq: bool = False,
-):
-    """Whitened-coarse IVF-PQ training (see the np core above for the
-    construction and serving contract). Sampling contract as
-    ``train_ivfpq``: pass ``sample_id_col`` for the seeded-uniform
-    rule."""
-    sample = _training_sample(df, vec_col, sample_rows, sample_id_col)
-    return train_whitened_ivfpq_np(
-        sample, n_centroids=n_centroids, m=m, ksub=ksub, iters=iters,
-        seed=seed, eps=eps, opq=opq,
-    )
-
-
-def spherical_kmeans_np(
-    sample_unit: np.ndarray, n_centroids: int, iters: int, seed: int = 42
-) -> np.ndarray:
-    """Spherical k-means on UNIT-NORM rows: assignment by max dot
-    product (== min squared euclidean once every centroid is unit
-    norm, so the existing serve kernels need no change), centroid
-    update = re-normalized member mean — the maximum-mean-cosine
-    update (Dhillon & Modha, "Concept Decompositions for Large Sparse
-    Text Data Using Clustering", Machine Learning 42, 2001). For the
-    cosine serving contract this keeps the coarse centroids ON the
-    sphere the data lives on, where plain Lloyd's unconstrained means
-    drift inside the ball (mean of unit vectors has norm < 1, shrinking
-    with cluster spread — wide cells get interior centroids and the
-    Voronoi partition stops being metric-matched). Deterministic for a
-    given (sample, seed): seeded row-choice init, empty or zero-mean
-    cells keep their previous centroid."""
-    X = np.asarray(sample_unit, dtype=np.float64)
-    rng = np.random.RandomState(seed)
-    idx = rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)
-    cents = X[idx].copy()
-    for _ in range(iters):
-        a = (X @ cents.T).argmax(axis=1)
-        for c in range(len(cents)):
-            members = X[a == c]
-            if len(members):
-                mu = members.sum(axis=0)
-                n = float(np.sqrt((mu * mu).sum()))
-                if n > 0.0:
-                    cents[c] = mu / n
-    return cents
-
-
-def train_spherical_ivfpq_np(
-    sample: np.ndarray,
-    n_centroids: int = 32,
-    m: int = 8,
-    ksub: int = 256,
-    iters: int = 5,
-    seed: int = 42,
-):
-    """Numpy core of ``train_spherical_ivfpq`` (same sample -> same
-    model, no Spark — the exact-oracle twin). Normalizes the RAW
-    sample rows to unit norm (zero rows pass through unscaled), runs
-    spherical k-means for the coarse stage, then trains the residual
-    codebooks in the NORMALIZED space with the final assignment taken
-    by the same squared-euclidean argmin the serve kernel uses. The
-    returned model is a drop-in for the ``metric='cosine'`` serving
-    path (``ann_join_topk(metric='cosine')`` / ``ivfpq_encode`` over
-    the L2-normalized codes table): unit centroids make euclidean
-    assignment identical to cosine assignment, so ONLY training
-    changes — encode, serve, and oracle replay are untouched. The
-    normalization accumulates the squared norm as a LEFT FOLD over
-    dimensions (the plans/ann_join.fold_norms order), keeping the
-    training space arithmetically identical to the serve/encode
-    space."""
-    X = np.asarray(sample, dtype=np.float64)
-    acc = np.zeros(len(X))
-    for t in range(X.shape[1]):
-        acc = acc + X[:, t] * X[:, t]
-    norms = np.sqrt(acc)
-    Xn = X / np.where(norms > 0.0, norms, 1.0)[:, None]
-    cents = spherical_kmeans_np(Xn, n_centroids, iters, seed)
-    assign = (
-        ((Xn[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    )
-    residuals = Xn - cents[assign]
-    books = _residual_pq_books_np(residuals, m=m, ksub=ksub, iters=iters, seed=seed)
-    return cents, books
-
-
-def train_spherical_ivfpq(
-    df: DataFrame,
-    n_centroids: int = 32,
-    m: int = 8,
-    ksub: int = 256,
-    vec_col: str = "embedding",
-    iters: int = 5,
-    sample_rows: int = 8192,
-    seed: int = 42,
-    sample_id_col: str | None = None,
-):
-    """Spherical-coarse IVF-PQ training for the COSINE serving
-    contract (see the np core above). Takes the RAW embeddings table —
-    normalization happens inside the np core, so the Spark sampler and
-    the DuckDB oracle builder fetch identical raw rows and reach
-    byte-identical models. Sampling contract as ``train_ivfpq``: pass
-    ``sample_id_col`` for the seeded-uniform rule."""
-    sample = _training_sample(df, vec_col, sample_rows, sample_id_col)
-    return train_spherical_ivfpq_np(
-        sample, n_centroids=n_centroids, m=m, ksub=ksub, iters=iters,
-        seed=seed,
-    )
-
-
 def pack_codes4(codes: np.ndarray) -> list[bytes]:
     """Pack (n, m) PQ codes with values < 16 into nibble-packed bytes
     — the 4-bit fast-scan layout (VERDICT r10 item 4): byte i holds
@@ -884,7 +710,6 @@ def ivfpq_encode(
     vec_col: str = "embedding",
     rotation: np.ndarray | None = None,
     pack4: bool = False,
-    whiten: np.ndarray | None = None,
 ) -> DataFrame:
     """Add ``cell`` (coarse assignment) and ``pq_code`` (residual
     codes) in ONE Arrow pass — the bulk index build. Write the result
@@ -900,15 +725,7 @@ def ivfpq_encode(
     byte) instead of array<int> — requires ksub <= 16. The argmin code
     values are identical either way; only the storage layout changes
     (the serving kernel unpacks losslessly), so the exact oracles hold
-    unchanged.
-
-    ``whiten``: ZCA matrix from ``train_whitened_ivfpq`` — every
-    vector enters the whitened coarse space (left-fold matvec, the
-    oracle's exact arithmetic) BEFORE cell assignment, and the
-    residual/PQ pipeline runs on the whitened coordinates (the
-    centroids and codebooks must be the whitened-space model trained
-    alongside W). Composes with ``rotation`` (OPQ on whitened
-    residuals) and ``pack4`` (storage-only)."""
+    unchanged."""
     import pandas as pd
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
@@ -919,14 +736,7 @@ def ivfpq_encode(
         if rotation is not None
         else None
     )
-    wmat = (
-        np.asarray(whiten, dtype=np.float64) if whiten is not None else None
-    )
     m, ksub, dsub = books.shape
-    if wmat is not None and wmat.shape != (m * dsub, m * dsub):
-        raise ValueError(
-            f"whiten is {wmat.shape}, codebooks cover dim {m * dsub}"
-        )
     if pack4 and ksub > 16:
         raise ValueError(
             f"pack4 stores one code per nibble; ksub {ksub} > 16 codes "
@@ -943,8 +753,6 @@ def ivfpq_encode(
     )
     def enc(vecs):
         mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        if wmat is not None:
-            mat = fold_matvec(mat, wmat)
         d = (mat**2).sum(axis=1)[:, None] - 2.0 * (mat @ c_t) + c_sq[None, :]
         cell = d.argmin(axis=1)
         res = mat - cents[cell]

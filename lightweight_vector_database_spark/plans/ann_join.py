@@ -161,7 +161,6 @@ def ann_join_topk(
     esc_refine: int | None = None,
     imi: tuple[np.ndarray, np.ndarray] | None = None,
     rotation: np.ndarray | None = None,
-    whiten: np.ndarray | None = None,
     model_dtype=np.float64,
 ) -> DataFrame:
     """Batched IVF-PQ top-k join (see module docstring).
@@ -230,19 +229,6 @@ def ann_join_topk(
     residual space, after the product-cell center is assembled; build
     the snapshot with ``imi_encode(..., rotation=R)``).
 
-    ``whiten``: ZCA whitening matrix from ``train_whitened_ivfpq`` —
-    the codes snapshot must be built by ``ivfpq_encode(..., whiten=W)``
-    with the whitened-space centroids/codebooks trained alongside it.
-    Probes enter the whitened space with the same left-fold matvec
-    (AFTER cosine normalization, matching the encode order), so cell
-    assignment, residuals and the ADC all run in the whitened
-    coordinates — the anisotropy-aware candidate GEOMETRY — while the
-    exact re-rank stays on the RAW vectors, so the reported metric is
-    unchanged. Composes with ``rotation`` (OPQ trained on whitened
-    residuals, ``train_whitened_ivfpq(opq=True)``), ``pred``/
-    ``adaptive`` and ``pack4`` snapshots; refused with ``imi`` (the
-    half-fold product decomposition has no whitened training path).
-
     ``model_dtype``: storage dtype for the broadcast centroids +
     codebooks. float64 (default) is required for the bit-exact oracle
     contract; float32 halves the broadcast at 100 TB model sizes
@@ -277,24 +263,6 @@ def ann_join_topk(
         if rot.shape != (m * dsub, m * dsub):
             raise ValueError(
                 f"rotation is {rot.shape}, codebooks cover dim {m * dsub}"
-            )
-    wmat = None
-    if whiten is not None:
-        if imi is not None:
-            raise ValueError(
-                "whiten does not compose with imi: the product coarse "
-                "model has no whitened training path (train_imi knows "
-                "nothing of the transform, and a whitened probe against "
-                "unwhitened half codebooks would route to the wrong "
-                "cells); use the flat whitened model "
-                "(train_whitened_ivfpq) or drop the whitening"
-            )
-        wmat = np.asarray(whiten, dtype=np.float64).astype(
-            model_dtype, copy=False
-        )
-        if wmat.shape != (m * dsub, m * dsub):
-            raise ValueError(
-                f"whiten is {wmat.shape}, codebooks cover dim {m * dsub}"
             )
     if imi is not None:
         # two-level (product) coarse quantizer — VERDICT r9 design
@@ -402,8 +370,7 @@ def ann_join_topk(
 
     b_model = register_cache(
         spark.sparkContext.broadcast(
-            (cents, books, live_cells, live_counts, imi_c1, imi_c2, rot,
-             wmat)
+            (cents, books, live_cells, live_counts, imi_c1, imi_c2, rot)
         )
     )
 
@@ -416,13 +383,8 @@ def ann_join_topk(
     def assign(batches: Iterator) -> Iterator:
         import pandas as pd
 
-        (bc_cents, _bc_books, bc_live, bc_counts, bc_c1, bc_c2, _bc_rot,
-         bc_whiten) = b_model.value
-        whiten_f = (
-            bc_whiten.astype(np.float64, copy=False)
-            if bc_whiten is not None
-            else None
-        )
+        (bc_cents, _bc_books, bc_live, bc_counts, bc_c1, bc_c2,
+         _bc_rot) = b_model.value
         if bc_c1 is not None:
             c1_f = bc_c1.astype(np.float64, copy=False)
             c2_f = bc_c2.astype(np.float64, copy=False)
@@ -457,13 +419,6 @@ def ann_join_topk(
                             f"vectors; zero-norm probe ids: {bad.tolist()}"
                         )
                     P = P / np.sqrt(nn)[:, None]
-                if whiten_f is not None:
-                    # whitened coarse space: the same left-fold matvec
-                    # the encoder ran (normalize-then-whiten order for
-                    # cosine), so assignment distances, the emitted
-                    # probe coordinates and every downstream ADC value
-                    # replay exactly in the SQL oracle
-                    P = fold_matvec(P, whiten_f)
                 n = len(P)
                 if bc_c1 is not None:
                     # IMI: two half folds (O(K1+K2) each) replace the
@@ -677,8 +632,8 @@ def ann_join_topk(
             return pd.DataFrame(
                 {probe_id_col: [], id_col: [], "adc_dist": [], "__esc": []}
             )
-        (bc_cents, bc_books, _bc_live, _bc_counts, bc_c1, bc_c2, bc_rot,
-         _bc_whiten) = b_model.value
+        (bc_cents, bc_books, _bc_live, _bc_counts, bc_c1, bc_c2,
+         bc_rot) = b_model.value
         books_f = bc_books.astype(np.float64, copy=False)
         rot_f = (
             bc_rot.astype(np.float64, copy=False) if bc_rot is not None
@@ -820,12 +775,10 @@ def ann_join_topk(
         if metric == "cosine"
         else metric_expr("euclidean_sq", vec_col, F.col(probe_vec_col))
     )
-    # Reuse is only bit-safe when the assignment emitted the RAW probe
-    # coordinates: the cosine path emits NORMALIZED probes and the
-    # whitened path emits whitened ones (the ADC space), while the
-    # exact re-rank contract is raw-vs-raw. Those paths re-read the
-    # caller's probe table as before.
-    if metric == "euclidean_sq" and wmat is None:
+    # Reuse is bit-safe only when the assignment emitted the RAW probe
+    # coordinates; the cosine path emits NORMALIZED ones (the ADC space),
+    # so it re-reads the caller's probes for the raw-vs-raw re-rank.
+    if metric == "euclidean_sq":
         probe_vecs = assigned.select(
             probe_id_col, probe_vec_col
         ).dropDuplicates([probe_id_col])

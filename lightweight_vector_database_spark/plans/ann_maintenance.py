@@ -53,9 +53,9 @@ from pyspark.sql import functions as F
 from ..sources.delta_snapshots import DeltaSnapshotStore
 
 
-def _model_fingerprint(cents, books, rotation, imi, whiten=None) -> str:
+def _model_fingerprint(cents, books, rotation, imi) -> str:
     h = hashlib.sha1()
-    for a in (cents, books, rotation, whiten, *(imi or ())):
+    for a in (cents, books, rotation, *(imi or ())):
         if a is not None:
             h.update(np.ascontiguousarray(np.asarray(a, dtype=np.float64)))
     return h.hexdigest()[:16]
@@ -88,11 +88,6 @@ class CodesSnapshot:
         identity (fingerprinted): a packed view must never mix with
         byte-code rows. Flat/OPQ coarse models only (the IMI encoder
         has no packed layout).
-    whiten:
-        ZCA whitening matrix (``train_whitened_ivfpq``) — the model's
-        coarse space transform, fingerprinted like the rotation so a
-        whitened view never mixes with unwhitened codes. Refused with
-        ``imi`` (same composition refusal as ``ann_join_topk``).
     """
 
     def __init__(
@@ -106,7 +101,6 @@ class CodesSnapshot:
         vec_col: str = "embedding",
         keep_cols: tuple[str, ...] = (),
         pack4: bool = False,
-        whiten=None,
     ):
         if view_store.id_col != base.id_col:
             raise ValueError(
@@ -120,12 +114,6 @@ class CodesSnapshot:
                 "pack4 maintains the flat/OPQ nibble layout; the IMI "
                 "encoder has no packed form — store byte codes or use "
                 "a flat coarse model"
-            )
-        if whiten is not None and imi is not None:
-            raise ValueError(
-                "whiten does not compose with imi (no whitened training "
-                "path for the product coarse model — same refusal as "
-                "ann_join_topk)"
             )
         if pack4 and np.asarray(codebooks).shape[1] > 16:
             raise ValueError(
@@ -154,16 +142,8 @@ class CodesSnapshot:
             if imi is not None
             else None
         )
-        # the whitening matrix is MODEL state exactly like the OPQ
-        # rotation: codes encoded under a different (or absent) W must
-        # refuse to mix — it enters the fingerprint, not a suffix
-        self.whiten = (
-            np.asarray(whiten, dtype=np.float64)
-            if whiten is not None
-            else None
-        )
         self.fingerprint = _model_fingerprint(
-            self.cents, self.books, self.rot, self.imi, self.whiten
+            self.cents, self.books, self.rot, self.imi
         ) + ("-p4" if self.pack4 else "")
         # the code LAYOUT is part of the view's identity: resuming a
         # byte-code store with pack4=True (or vice versa) must refuse
@@ -197,7 +177,7 @@ class CodesSnapshot:
             enc = ivfpq_encode(
                 rows, self.cents, self.books,
                 vec_col=self.vec_col, rotation=self.rot,
-                pack4=self.pack4, whiten=self.whiten,
+                pack4=self.pack4,
             )
         return enc.select(self.id_col, *self.keep_cols, "cell", "pq_code")
 

@@ -79,4 +79,3 @@ from . import pipeline_suite12  # noqa: E402,F401
 from . import pipeline_suite13  # noqa: E402,F401
 from . import pipeline_suite14  # noqa: E402,F401
 from . import pipeline_suite15  # noqa: E402,F401
-from . import pipeline_suite16  # noqa: E402,F401

@@ -265,7 +265,6 @@ def _aj_replay_sql(
     adaptive_esc: tuple[int, int] | None = None,
     imi: tuple | None = None,
     rotation=None,
-    whiten=None,
 ) -> str:
     """The shared WITH-chain replaying ann_join_topk in DuckDB up to
     the per-probe top-k CTE ``topk(probe_id, vec_id, dist, rank)``.
@@ -298,20 +297,8 @@ def _aj_replay_sql(
     ``ivfpq_encode(rotation=)`` + ``ann_join_topk(rotation=)`` — base
     and probe residuals are rotated before code assignment / ADC with
     a per-output-coordinate ``list_sum`` fold over input coordinates,
-    the exact IEEE order of the kernel's ``fold_matvec``.
-
-    ``whiten``: ZCA whitening matrix replaying ``ivfpq_encode(
-    whiten=)`` + ``ann_join_topk(whiten=)`` — base vectors and probes
-    enter the whitened coarse space (normalize-then-whiten under
-    ``norm``, the kernel's order) with the same per-output-coordinate
-    fold, while the exact re-rank stays on the raw vectors. Refused
-    with ``imi``, mirroring the serving kernel."""
+    the exact IEEE order of the kernel's ``fold_matvec``."""
     m, ksub, dsub = books.shape
-    if whiten is not None and imi is not None:
-        raise ValueError(
-            "whiten does not compose with imi (same refusal as "
-            "ann_join_topk)"
-        )
     # literals hoisted into a ONE-ROW consts CTE (cross-joined where
     # needed): inlining the ~80 KB codebook array inside per-row
     # lambdas makes DuckDB re-evaluate the list constructor per row —
@@ -492,35 +479,6 @@ def _aj_replay_sql(
         pwork_cte = """pwork AS (
   SELECT probe_id, probe_vec, probe_vec AS wv FROM probes
 )"""
-    if whiten is not None:
-        # whitened coarse space: wrap the encoded-space CTEs with the
-        # per-output-coordinate fold-matvec (wv_out[i] = left fold over
-        # t of wmat[i][t] * v[t] — the kernel's fold_matvec IEEE
-        # order). The inner subquery is the UNwhitened CTE body, so
-        # norm composes in the kernel's normalize-then-whiten order;
-        # probe_vec stays raw for the exact re-rank.
-        import numpy as _np
-
-        wm = _np.asarray(whiten, dtype=_np.float64)
-        consts_model += f", {_dlst2(wm.tolist())} AS wmat"
-
-        def _wfold(src: str) -> str:
-            return (
-                f"list_transform({rng_dim}, i -> list_sum(list_transform("
-                f"{rng_dim}, t -> wmat[i][t] * {src}[t])))"
-            )
-
-        base_body = base_cte[len("base AS (") : -1]
-        base_cte = (
-            f"base AS (\n  SELECT vec_id, {_wfold('bv')} AS bv\n"
-            f"  FROM ({base_body}), consts\n)"
-        )
-        pwork_body = pwork_cte[len("pwork AS (") : -1]
-        pwork_cte = (
-            "pwork AS (\n  SELECT probe_id, probe_vec, "
-            f"{_wfold('wv')} AS wv\n  FROM ({pwork_body}), consts\n)"
-        )
-
     # residual code per subspace (same argmin construction as the
     # ann_ivfpq_refined oracle, index_suite._build_pq_oracle_sqls, but
     # over the precomputed residual vector rv)

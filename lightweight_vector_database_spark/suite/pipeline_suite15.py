@@ -1,198 +1,31 @@
-"""Training-pipeline queries, fifteenth batch (round 12): the
-ANISOTROPY-AWARE coarse layer — ZCA whitening in front of IVF-PQ
-(VERDICT r11 item 3).
+"""``ann_join_filtered_cosine_adaptive``: per-probe adaptive escalation
+on the filtered-cosine shape (VERDICT r11 item 4).
 
-Real embedding corpora have correlated, variance-skewed coordinates;
-when that skew degenerates Lloyd's k-means (centroids starve along
-the dominant variance directions), a covariance-conditioned coarse
-stage restores the allocation. ``zca_whitening_np`` equalizes the
-spectrum before the coarse stage: centroids, residuals and codebooks
-live in the whitened space, probes enter it with the same left-fold
-matvec at serving time, and the exact re-rank stays on the RAW
-vectors so the reported metric is unchanged
-(operators/similarity.train_whitened_ivfpq / plans/ann_join.py
-``whiten=``). Measured caveat (ROUND12_NOTES): on the sweep
-generator's aniso mix the collapse claimed in r11 does NOT reproduce
-(62/64 live cells, balanced), and at matched nprobe the raw Voronoi
-partition — being metric-matched — retrieves as well or better;
-whitening is an OPTION whose use case is a corpus whose coarse
-training demonstrably degenerates (probe_sweep now records
-coarse_stats with every run so that is detectable from evidence).
-
-Both queries replay the ENTIRE whitened pipeline in DuckDB —
-whitening fold, whitened coarse assignment, residual codes, ADC,
-exact re-rank — via ``_aj_replay_sql(whiten=)``, so the new coarse
-layer gets the same exact value-hash contract as every other ANN
-shape. ``ann_join_whitened_opq`` additionally composes the OPQ
-rotation trained on the WHITENED residuals
-(``train_whitened_ivfpq(opq=True)``) — the composition the
-anisotropic axis was built for.
-
-Reference contract being scaled: find_k_nearest_neighbors
-(kd_tree_database.py:285-304) served through an IVF-PQ whose coarse
-partition is conditioned on the corpus covariance.
+The full operating point — base AND escalation knobs — resolves from
+the recorded FRONTIER_sf001_fcos_adapt.json (tools/fixture_frontier.py
+--shape filtered_cosine_adaptive) through
+operators/tiering.fixture_serving_point. The oracle replays the whole
+adaptive filtered-cosine pipeline via ``_aj_replay_sql(adaptive_esc=,
+base_where=, norm=)``. Reference contract being scaled:
+find_k_nearest_neighbors with a metadata filter
+(kd_tree_database.py:285-304).
 """
 
 from __future__ import annotations
 
-import os
-
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.tiering import fixture_serving_point
 from ..sources import load_table
 from . import register
-from .index_suite import _ORACLE_SF_DIR
 from .pipeline_suite11 import (
     _AJ_PROBES_CTE,
     _aj_probes,
     _aj_replay_sql,
-    _write_cell_snapshot,
+    _repo_file,
 )
-
-_WH_CENTROIDS = 8
-_WH_M = 8
-_WH_KSUB = 64
-_WH_ITERS = 3
-_WH_SAMPLE = 8192
-_WH_K = 10
-_WH_NPROBE = 4
-_WH_REFINE = 8
-_WH_MEMO: dict = {}
-_WH_SNAP: dict = {}
-
-
-def _wh_model(spark: SparkSession, sf_dir: str, opq: bool):
-    from ..operators.similarity import train_whitened_ivfpq
-
-    key = (sf_dir, opq)
-    if key not in _WH_MEMO:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _WH_MEMO[key] = train_whitened_ivfpq(
-            emb, n_centroids=_WH_CENTROIDS, m=_WH_M, ksub=_WH_KSUB,
-            iters=_WH_ITERS, sample_rows=_WH_SAMPLE,
-            sample_id_col="vec_id", opq=opq,
-        )
-    return _WH_MEMO[key]
-
-
-def _wh_trained_np(opq: bool):
-    """The whitened model retrained in numpy from the sf0.01 fixture
-    via the identical md5-ordered sample rule (the _aj_trained_np
-    pattern) — None when the fixture is absent."""
-    try:
-        import duckdb
-
-        con = duckdb.connect()
-        rows = con.execute(
-            f"SELECT embedding FROM '{_ORACLE_SF_DIR}/embeddings.parquet' "
-            f"ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {_WH_SAMPLE}"
-        ).fetchall()
-        con.close()
-    except Exception:
-        return None
-    if not rows:
-        return None
-    from ..operators.similarity import train_whitened_ivfpq_np
-
-    sample = np.array([r[0] for r in rows], dtype=np.float64)
-    return train_whitened_ivfpq_np(
-        sample, n_centroids=_WH_CENTROIDS, m=_WH_M, ksub=_WH_KSUB,
-        iters=_WH_ITERS, opq=opq,
-    )
-
-
-def _wh_codes(spark: SparkSession, sf_dir: str, opq: bool) -> DataFrame:
-    from ..operators.similarity import ivfpq_encode
-
-    model = _wh_model(spark, sf_dir, opq)
-    if opq:
-        W, cents, rot, books = model
-    else:
-        (W, cents, books), rot = model, None
-    key = (spark.sparkContext.applicationId, sf_dir, opq)
-    if key not in _WH_SNAP:
-        name = (
-            f"annwh_{os.path.basename(sf_dir.rstrip('/'))}"
-            f"_c{_WH_CENTROIDS}m{_WH_M}k{_WH_KSUB}"
-            f"{'o' if opq else ''}_v1"
-        )
-        _WH_SNAP[key] = _write_cell_snapshot(
-            spark, name,
-            lambda: ivfpq_encode(
-                load_table(spark, sf_dir, "embeddings"), cents, books,
-                rotation=rot, whiten=W,
-            ).select("vec_id", "cell", "pq_code"),
-        )
-    return _WH_SNAP[key]
-
-
-def _wh_query(opq: bool):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..plans.ann_join import ann_join_topk
-
-        model = _wh_model(spark, sf_dir, opq)
-        if opq:
-            W, cents, rot, books = model
-        else:
-            (W, cents, books), rot = model, None
-        codes = _wh_codes(spark, sf_dir, opq)
-        emb = load_table(spark, sf_dir, "embeddings")
-        out = ann_join_topk(
-            codes, cents, books, _aj_probes(spark, sf_dir), raw=emb,
-            k=_WH_K, nprobe=_WH_NPROBE, refine=_WH_REFINE,
-            rotation=rot, whiten=W,
-        )
-        return out.select(
-            "probe_id",
-            "vec_id",
-            F.round(F.col("dist"), 6).alias("dist"),
-            F.col("rank").cast("long").alias("rank"),
-        )
-
-    return q
-
-
-def _wh_oracle(opq: bool) -> str | None:
-    trained = _wh_trained_np(opq)
-    if trained is None:
-        return None
-    if opq:
-        W, cents, rot, books = trained
-    else:
-        (W, cents, books), rot = trained, None
-    body = _aj_replay_sql(
-        cents, books, _AJ_PROBES_CTE, k=_WH_K, nprobe=_WH_NPROBE,
-        refine=_WH_REFINE, rotation=rot, whiten=W,
-    )
-    return body + """
-SELECT probe_id, vec_id, round(dist, 6) AS dist, rank FROM topk
-"""
-
-
-register("ann_join_whitened", _wh_query(opq=False), _wh_oracle(opq=False))
-register(
-    "ann_join_whitened_opq", _wh_query(opq=True), _wh_oracle(opq=True)
-)
-
-
-# --- adaptive escalation on the filtered-cosine shape -------------------------
-# VERDICT r11 item 4: the adaptive shape carried esc-bearing frontier
-# records since r11, but the fcos fixture family walked base-only
-# points, so no fcos registration could resolve adaptive knobs from
-# evidence. FRONTIER_sf001_fcos_adapt.json (tools/fixture_frontier.py
-# --shape filtered_cosine_adaptive) walks explicit (base, escalation)
-# points on the composed predicate + cosine contract; this query
-# resolves its FULL operating point — base AND escalation — through
-# operators/tiering.fixture_serving_point, and the oracle replays the
-# whole adaptive filtered-cosine pipeline (displaced-home test,
-# qualifying-mass widening, per-probe budget) via
-# _aj_replay_sql(adaptive_esc=, base_where=, norm=).
-
-from ..operators.tiering import fixture_serving_point  # noqa: E402
-from .pipeline_suite11 import _repo_file  # noqa: E402
-from .pipeline_suite12 import (  # noqa: E402
+from .pipeline_suite12 import (
     _AJF_PRED,
     _AJFC_K,
     _ajn_codes,

@@ -13,7 +13,7 @@
 4 (low): audit() with only references() constraints exploded an empty
    struct array (NullType) and failed analysis.
 5 (low): kmeans_fixed silently truncated centroids when dim < actual
-   vector length.
+   vector length (and, per ADVICE r13, any ragged or null row).
 """
 
 from __future__ import annotations
@@ -185,6 +185,30 @@ def test_kmeans_rejects_dim_mismatch(spark):
         kmeans_fixed(df, k=2, iters=1, dim=3)
     out = kmeans_fixed(df, k=2, iters=1, dim=4)  # matching dim still works
     assert out.count() == 2
+
+
+@pytest.mark.parametrize(
+    "vec_id, bad, match",
+    [
+        (10, [1.0, 2.0, 3.0, 4.0, 5.0], "length is not dim=4"),
+        (10, [1.0, 2.0, 3.0], "length is not dim=4"),
+        (10, None, "null or empty"),
+        (-1, None, "null or empty"),
+    ],
+    ids=["longer", "shorter", "null", "null_init"],
+)
+def test_kmeans_rejects_ragged_or_null_vectors(spark, vec_id, bad, match):
+    """ADVICE r13: only the first init row's length was validated; a
+    longer row was silently truncated, a shorter one died on an ANSI
+    index error, and a null one joined the last cluster. Every row's
+    length is now checked in the round-1 aggregate (the null_init row
+    sorts first, so it is caught among the init rows)."""
+    rows = [(i, [float(i), float(i + 1), 0.0, 1.0]) for i in range(6)]
+    df = spark.createDataFrame(
+        rows + [(vec_id, bad)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match=match):
+        kmeans_fixed(df, k=2, iters=2, dim=4)
 
 
 def test_udtf_arrow_equals_row_python(spark, sf_dir):

@@ -20,6 +20,7 @@ from lightweight_vector_database_spark.operators.similarity import (
 )
 from lightweight_vector_database_spark.plans.ann_maintenance import (
     CodesSnapshot,
+    _model_fingerprint,
 )
 from lightweight_vector_database_spark.sources.delta_snapshots import (
     DeltaSnapshotStore,
@@ -201,6 +202,24 @@ def test_model_change_refuses_resume(spark, tmp_path, model):
         (r.vec_id, r.cell, tuple(r.pq_code)) for r in cs2.codes().collect()
     )
     assert a == b
+
+
+def test_model_fingerprint_digests_are_stable():
+    """A codes view records the fingerprint of the model it was built
+    under and refuses to resume under any other, so the digest of a
+    given model must never change across releases — otherwise every
+    existing on-disk view stops resuming. Literal digests pin the
+    plain, OPQ (rotation) and IMI byte layouts."""
+    cents = np.arange(12, dtype=np.float64).reshape(3, 4) / 7.0
+    books = np.arange(16, dtype=np.float64).reshape(2, 4, 2) / 11.0
+    rot = np.eye(4)[::-1]
+    imi = (
+        np.arange(6, dtype=np.float64).reshape(3, 2) / 5.0,
+        np.arange(4, dtype=np.float64).reshape(2, 2) / 3.0,
+    )
+    assert _model_fingerprint(cents, books, None, None) == "d11d46806d77db03"
+    assert _model_fingerprint(cents, books, rot, None) == "44180ea5d895ec99"
+    assert _model_fingerprint(None, books, None, imi) == "c0a46dc7ab0af1c7"
 
 
 def test_validation(spark, tmp_path, model):

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
+from lightweight_vector_database_spark.operators import graph
 from lightweight_vector_database_spark.operators.dedup import jaccard_pairs
 from lightweight_vector_database_spark.operators.graph import (
     connected_components,
@@ -69,3 +72,23 @@ def test_dedup_clusters_on_documents(spark, sf_dir):
         .count()
     )
     assert mismatches == 0
+
+
+def test_observation_wait_is_bounded(spark, monkeypatch):
+    """The convergence fingerprint is read from an Observation. If its
+    metrics never arrive (here: the observed DataFrame is never
+    actioned) the wait must raise TimeoutError within
+    OBSERVATION_WAIT_S, never block forever."""
+    from pyspark.sql import Observation
+
+    monkeypatch.setattr(graph, "OBSERVATION_WAIT_S", 0.5)
+    obs = Observation()
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("n"))
+    t0 = time.monotonic()
+    with pytest.raises(TimeoutError, match="did not arrive"):
+        graph._observed_metrics(obs)
+    assert time.monotonic() - t0 < 10.0
+    # a delivered observation still reads through the same wait
+    done = Observation()
+    spark.range(3).observe(done, F.count(F.lit(1)).alias("n")).collect()
+    assert graph._observed_metrics(done) == {"n": 3}

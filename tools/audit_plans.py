@@ -41,10 +41,7 @@ EXPECTED_PYTHON = {
     "ann_join_imi",  # two-level coarse model: same boundaries, cell centers assembled from the halves
     "ann_join_opq",  # OPQ rotation: same boundaries, residuals rotated inside the kernels
     "ann_join_pq4",  # nibble-packed codes: same boundaries, unpack inside the ADC kernel
-    "ann_join_whitened",  # whitened coarse layer: same boundaries, W folded inside the kernels
-    "ann_join_whitened_opq",  # whitening + rotation composed: same boundaries
     "ann_join_filtered_cosine_adaptive",  # esc + predicate + normalized tier: same boundaries
-    "ann_join_spherical",  # spherical coarse model: identical serving kernels (only training differs)
     "dedup_semantic_ann",  # corpus-as-probes ann_join_topk (same boundaries)
     "knn_join_bulk",  # distributed probe path: mapInPandas candidate derivation + cogrouped matmul scoring (plans/bulk_knn)
     "knn_join_bulk_cosine",  # same machinery over the normalized snapshot + exact-cosine re-rank

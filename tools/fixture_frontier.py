@@ -32,11 +32,6 @@ Shapes:
   walked over explicit (base, escalation) points, each record
   carrying its esc knobs for operators/tiering.fixture_serving_point.
   Resolved by suite/pipeline_suite15.
-* ``spherical`` — the ann_join_spherical shape (r12): the
-  spherical-kmeans coarse build over the same normalized encode
-  space, vs the SAME exact cosine join as the ``cosine`` shape — the
-  build changes, the contract does not. Resolved by
-  suite/pipeline_suite16.
 
 The output JSON's ``results`` are frontier records consumable directly
 by operators/tiering.ann_operating_point.
@@ -142,24 +137,6 @@ def run_knn_shape(shape: str, out_json: str) -> None:
         kwargs = {"metric": "cosine", "pred": pred}
         if shape == "filtered_cosine_adaptive":
             kwargs["adaptive"] = True
-    elif shape == "spherical":
-        # the ann_join_spherical shape: spherical-kmeans coarse model
-        # over the same normalized encode space, true-cosine re-rank,
-        # vs the SAME exact cosine join as the plain-cosine shape (the
-        # build changes, the contract does not)
-        from lightweight_vector_database_spark.suite.pipeline_suite16 import (
-            _SPH_K,
-            _sph_codes,
-            _sph_model,
-        )
-
-        k, pred = _SPH_K, None
-        cents, books = _sph_model(spark, SF_DIR)
-        codes = _sph_codes(spark, SF_DIR)
-        exact = knn_join(
-            probes, emb, k=k, metric="cosine", strategy="partial"
-        )
-        kwargs = {"metric": "cosine"}
     else:
         k, pred = _AJC_K, None
         cents, books = _ajn_model(spark, SF_DIR)
@@ -225,7 +202,6 @@ def run_knn_shape(shape: str, out_json: str) -> None:
                     "filtered_cosine": "filtered cosine",
                     "filtered_cosine_adaptive": "filtered cosine",
                     "adaptive": "surviving-cells filtered",
-                    "spherical": "cosine",
                 }[shape]
                 + " join",
                 **(
@@ -257,7 +233,6 @@ def main() -> None:
         "filtered_cosine": "FRONTIER_sf001_fcos.json",
         "filtered_cosine_adaptive": "FRONTIER_sf001_fcos_adapt.json",
         "adaptive": "FRONTIER_sf001_adapt.json",
-        "spherical": "FRONTIER_sf001_sph.json",
     }[shape]
     out_json = (
         sys.argv[sys.argv.index("--json") + 1]
@@ -265,7 +240,7 @@ def main() -> None:
         else default_json
     )
     if shape in ("filtered", "cosine", "filtered_cosine",
-                 "filtered_cosine_adaptive", "adaptive", "spherical"):
+                 "filtered_cosine_adaptive", "adaptive"):
         run_knn_shape(shape, out_json)
         return
     from lightweight_vector_database_spark.functions.distance import (

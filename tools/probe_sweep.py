@@ -329,31 +329,6 @@ def main() -> None:
     # generator's residuals are near-isotropic, so a recording here is
     # the honest lower bound of the knob.
     use_opq = "--opq" in sys.argv
-    # --whiten : ZCA whitening in front of the coarse stage
-    # (train_whitened_ivfpq / ivfpq_encode(whiten=) / ann_join_topk(
-    # whiten=)) — the anisotropy-aware coarse layer (VERDICT r11 item
-    # 3). Composes with --opq (rotation trained on whitened residuals)
-    # and the ksub<=16 pack4 layout; refused with --imi.
-    use_whiten = "--whiten" in sys.argv
-    if use_whiten and "--imi" in sys.argv:
-        raise SystemExit("--whiten does not compose with --imi "
-                         "(same refusal as ann_join_topk)")
-    # --spherical : spherical-kmeans coarse layer (train_spherical_
-    # ivfpq) for the COSINE contract — centroid means re-normalized
-    # onto the sphere every iteration, so the coarse Voronoi partition
-    # is trained in the metric it serves (VERDICT r11 item 3's
-    # "(or spherical k-means)" half). Cosine-only by construction;
-    # measured against the plain-Lloyd cosine build at identical
-    # knobs. Refused with --opq/--whiten/--imi (no trained
-    # composition — the honest-refusal rule).
-    use_spherical = "--spherical" in sys.argv
-    if use_spherical and not cosine:
-        raise SystemExit("--spherical requires --cosine (spherical "
-                         "k-means is the cosine contract's coarse "
-                         "trainer)")
-    if use_spherical and (use_opq or use_whiten or "--imi" in sys.argv):
-        raise SystemExit("--spherical does not compose with "
-                         "--opq/--whiten/--imi (no trained composition)")
     if cosine:
         # cosine contract: model + codes over the L2-NORMALIZED base
         # (the exact left-fold-norm arithmetic the kernel normalizes
@@ -365,40 +340,12 @@ def main() -> None:
         enc_base = _norm_emb(base)
     else:
         enc_base = base
-    ann_whiten = None
-    if use_whiten:
-        from lightweight_vector_database_spark.operators.similarity import (
-            train_whitened_ivfpq,
-        )
-
-        model = train_whitened_ivfpq(
-            enc_base, n_centroids=ann_cells, m=ann_m, ksub=ann_ksub,
-            iters=4, sample_rows=8192, sample_id_col="vec_id",
-            opq=use_opq,
-        )
-        if use_opq:
-            ann_whiten, cents, ann_rot, books = model
-        else:
-            (ann_whiten, cents, books), ann_rot = model, None
-    elif use_opq:
+    if use_opq:
         from lightweight_vector_database_spark.operators.similarity import (
             train_opq,
         )
 
         cents, ann_rot, books = train_opq(
-            enc_base, n_centroids=ann_cells, m=ann_m, ksub=ann_ksub,
-            iters=4, sample_rows=8192, sample_id_col="vec_id",
-        )
-    elif use_spherical:
-        from lightweight_vector_database_spark.operators.similarity import (
-            train_spherical_ivfpq,
-        )
-
-        ann_rot = None
-        # enc_base is already the normalized table under --cosine; the
-        # trainer re-normalizes internally (identity on unit rows), so
-        # sampling it keeps one table for train + encode
-        cents, books = train_spherical_ivfpq(
             enc_base, n_centroids=ann_cells, m=ann_m, ksub=ann_ksub,
             iters=4, sample_rows=8192, sample_id_col="vec_id",
         )
@@ -411,7 +358,6 @@ def main() -> None:
     codes_path = os.path.join(tmp, "codes")
     ivfpq_encode(
         enc_base, cents, books, rotation=ann_rot, pack4=ann_ksub <= 16,
-        whiten=ann_whiten,
     ).select(
         "vec_id", "cell", "pq_code"
     ).repartition("cell").write.mode("overwrite").partitionBy(
@@ -507,7 +453,7 @@ def main() -> None:
         paths["ann"] = lambda p=probes: ann_join_topk(
             codes, cents, books, p, raw=base, k=K, metric=sweep_metric,
             nprobe=ann_nprobe, refine=ann_refine, code_stats=code_stats,
-            rotation=ann_rot, whiten=ann_whiten,
+            rotation=ann_rot,
         )
         if imi_k:
             paths["ann_imi"] = lambda p=probes: ann_join_topk(
@@ -535,7 +481,7 @@ def main() -> None:
             paths["ann_filt"] = lambda p=probes: ann_join_topk(
                 codes, cents, books, p, raw=base, k=K, metric=sweep_metric,
                 nprobe=ann_nprobe, refine=ann_refine, pred=FILT_PRED,
-                rotation=ann_rot, whiten=ann_whiten,
+                rotation=ann_rot,
             )
             # per-probe adaptive escalation at the SAME base knob
             # (VERDICT r9 item 1): only predicate-displaced probes pay
@@ -545,7 +491,7 @@ def main() -> None:
             paths["ann_adapt"] = lambda p=probes: ann_join_topk(
                 codes, cents, books, p, raw=base, k=K, metric=sweep_metric,
                 nprobe=ann_nprobe, refine=ann_refine, pred=FILT_PRED,
-                adaptive=True, rotation=ann_rot, whiten=ann_whiten,
+                adaptive=True, rotation=ann_rot,
                 esc_nprobe=esc_nprobe, esc_refine=esc_refine,
             )
         if cosine:
@@ -631,8 +577,6 @@ def main() -> None:
                     "ann_m": ann_m,
                     "ann_ksub": ann_ksub,
                     "ann_opq": use_opq,
-                    "ann_whiten": use_whiten,
-                    "ann_spherical": use_spherical,
                     "coarse_stats": coarse_stats,
                     "aniso": aniso,
                     "esc_nprobe": esc_nprobe,
