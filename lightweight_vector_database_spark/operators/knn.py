@@ -39,6 +39,22 @@ from pyspark.sql import functions as F
 from ..functions.distance import metric_expr
 
 
+def _dim_checked(dist: Column, vec_col: str, probe_dim: Column) -> Column:
+    """``dist``, failing the query when a vector's length differs from
+    ``probe_dim``: zip_with silently null-pads mismatched arrays, which
+    would sort nulls FIRST and return garbage neighbors (the reference
+    asserts dims at insert; queries here must assert at read).
+    assert_true returns NULL on success."""
+    guard = F.assert_true(
+        F.size(F.col(vec_col)) == probe_dim,
+        F.concat(
+            F.lit("probe dim "), probe_dim.cast("string"),
+            F.lit(" != vector dim "), F.size(F.col(vec_col)).cast("string"),
+        ),
+    )
+    return F.when(guard.isNull(), dist)
+
+
 def knn(
     df: DataFrame,
     probe: Sequence[float],
@@ -55,18 +71,9 @@ def knn(
     if pred is not None:
         df = df.filter(pred)  # filter-before-topk, kd_tree_database.py:186-190
     dist = metric_expr(metric, vec_col, list(probe), **metric_kwargs)
-    # dimension guard: zip_with silently null-pads mismatched arrays,
-    # which would sort nulls FIRST and return garbage neighbors. Fail
-    # loudly instead (the reference asserts dims at insert; queries
-    # here must assert at read). assert_true returns NULL on success.
-    guard = F.assert_true(
-        F.size(F.col(vec_col)) == len(list(probe)),
-        F.concat(
-            F.lit(f"probe dim {len(list(probe))} != vector dim "),
-            F.size(F.col(vec_col)).cast("string"),
-        ),
+    scored = df.withColumn(
+        dist_col, _dim_checked(dist, vec_col, F.lit(len(list(probe))))
     )
-    scored = df.withColumn(dist_col, F.when(guard.isNull(), dist))
     # ORDER BY + LIMIT plans as TakeOrderedAndProject (per-task k-heap).
     return scored.orderBy(F.col(dist_col).asc(), F.col(id_col).asc()).limit(k)
 
@@ -112,10 +119,12 @@ def knn_join(
 
     Output: (probe_id, vec_id, dist, rank) sorted within each probe.
 
-    strategy='auto' picks 'partial' (map-side top-k reduction before
-    the window shuffle) when the base table spans enough partitions
-    for the reduction to pay for its Arrow round-trip, else the plain
-    window. Both produce identical results (tested).
+    strategy='auto' picks by the base table's partition count: over 8
+    partitions, 'matmul' (``knn_join_matmul``) for euclidean_sq and
+    'partial' (map-side top-k reduction before the window shuffle) for
+    the other metrics; otherwise the plain 'window'. All produce
+    identical results (tested). A probe whose dimension differs from
+    the base vectors' raises instead of scoring.
     """
     if strategy == "auto":
         # large base + squared-Euclidean: the matmul map-side path
@@ -132,8 +141,9 @@ def knn_join(
             probe_vec_col=probe_vec_col, vec_col=vec_col, id_col=id_col,
         )
     pairs = base.join(F.broadcast(probes))  # broadcast nested loop; base never shuffles
+    dist = metric_expr(metric, vec_col, F.col(probe_vec_col), **metric_kwargs)
     scored = pairs.withColumn(
-        dist_col, metric_expr(metric, vec_col, F.col(probe_vec_col), **metric_kwargs)
+        dist_col, _dim_checked(dist, vec_col, F.size(F.col(probe_vec_col)))
     ).select(probe_id_col, id_col, dist_col)
 
     if strategy == "partial":
@@ -282,6 +292,129 @@ def adaptive_probe_chunk(
     return max(16, min(requested, target_bytes // max(8 * n_rows, 1)))
 
 
+# probes scored per gemm in ``topk_rows`` (before adaptive_probe_chunk
+# shrinks it for large base groups)
+PROBE_CHUNK = 4_096
+
+
+def stack_vectors(col) -> np.ndarray:
+    """A pandas column of equal-length arrays as one float64 matrix."""
+    return np.stack(col.to_numpy()).astype(np.float64)
+
+
+def topk_rows(
+    M: np.ndarray,
+    ids: np.ndarray,
+    P: np.ndarray,
+    k: int,
+    metric: str,
+    inv_diag=None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Exact top-k of base rows ``M`` (ids ``ids``) for every probe row
+    of ``P`` — the one numpy kernel behind the exact kNN joins
+    (knn_join_matmul's map pass, knn_join_blocks' and knn_join_bulk's
+    cogroup scorers).
+
+    Returns (probe row index into ``P``, vec id, dist): min(k, n) rows
+    per probe, ordered by (dist, id) within each probe; NaN distances
+    sort last. Distances are ``np_dists`` (the codegen left-fold
+    formula), so they match the oracle bit-for-bit. For euclidean_sq
+    and cosine one gemm per probe chunk selects a tie-safe candidate
+    superset (``matmul_tie_thresholds`` / ``cosine_tie_thresholds``,
+    padded to 2k) and only those rows get exact distances; the other
+    metrics score every row per probe.
+    """
+    ids = np.asarray(ids, dtype=np.int64)
+    n = len(ids)
+    if P.shape[1] != M.shape[1]:
+        raise ValueError(f"probe dim {P.shape[1]} != vector dim {M.shape[1]}")
+    kk = min(k, n)
+    keep_pad = 2 * k
+    gemm = metric in ("euclidean_sq", "cosine") and n > keep_pad
+    # base-row norms, computed once and shared across every probe chunk
+    m_sq = (M**2).sum(axis=1) if gemm else None
+    out_rows = np.empty((len(P), kk), dtype=np.int64)
+    out_dist = np.empty((len(P), kk), dtype=np.float64)
+    every = slice(None)
+    step = adaptive_probe_chunk(n, PROBE_CHUNK)
+    for lo in range(0, len(P), step):
+        Pm = P[lo : lo + step]
+        if gemm and metric == "euclidean_sq":
+            p_sq = (Pm**2).sum(axis=1)
+            D = m_sq[:, None] - 2.0 * (M @ Pm.T) + p_sq[None, :]
+            thr = matmul_tie_thresholds(
+                D, keep_pad, M.shape[1], float(m_sq.max()), p_sq
+            )
+        elif gemm:
+            # one gemm scores the whole chunk (scoring every row per
+            # probe re-reads M once PER PROBE: measured 1600s for the
+            # 10^5-probe x 1M-row filtered comparator in
+            # PROBE_SWEEP_r10_fcos_base1M vs 313s for the euclidean
+            # gemm on the identical tiling)
+            p_norm = np.sqrt((Pm**2).sum(axis=1))
+            D = 1.0 - (M @ Pm.T) / (np.sqrt(m_sq)[:, None] * p_norm[None, :])
+            thr = cosine_tie_thresholds(D, keep_pad, M.shape[1])
+        for bi in range(len(Pm)):
+            rows = every
+            if gemm:
+                hit = np.nonzero(D[:, bi] <= thr[bi])[0]
+                # zero-norm rows score NaN in the cosine gemm and fail
+                # the <= cut; the exact path keeps them (NaN sorts
+                # last), so such a probe scans every row
+                if len(hit) >= kk:
+                    rows = hit
+            exact = np_dists(metric, M[rows], Pm[bi], inv_diag=inv_diag)
+            order = np.lexsort((ids[rows], exact))[:kk]
+            out_rows[lo + bi] = order if rows is every else rows[order]
+            out_dist[lo + bi] = exact[order]
+    return (
+        np.repeat(np.arange(len(P)), kk),
+        ids[out_rows.ravel()],
+        out_dist.ravel(),
+    )
+
+
+def cogroup_apply(
+    left: DataFrame, right: DataFrame, keys: Sequence[str], fn, schema: str
+) -> DataFrame:
+    """``left`` and ``right`` cogrouped on ``keys`` through ``fn``
+    (applyInPandas), explicitly co-partitioned on the keys.
+
+    The explicit repartition satisfies the cogroup's required
+    distribution (same keys and count on both sides), so it replaces
+    the planner's implicit exchanges one-for-one — and unlike those it
+    is exempt from AQE's partition coalescing, which sizes
+    post-shuffle partitions by BYTES and so packs CPU-heavy Python
+    scoring groups onto a few tasks when the inputs are small on the
+    wire (profiled: the 10^4-probe ANN ladder ran its 5.2s scoring
+    stage on 6 tasks of 32 cores). Target = the session's shuffle
+    parallelism, never less than the core count.
+    """
+    spark = left.sparkSession
+    n_shuf = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200") or 200),
+    )
+    return (
+        left.repartition(n_shuf, *keys)
+        .groupBy(*keys)
+        .cogroup(right.repartition(n_shuf, *keys).groupBy(*keys))
+        .applyInPandas(fn, schema)
+    )
+
+
+def psalt_floor(spark, n_cells: int) -> int:
+    """Least per-cell probe-salt count for a cogroup keyed by
+    (cell, salt, psalt) over ``n_cells`` live cells (guide §2.5 "too
+    few distinct partitioning keys"): with few candidate cells and the
+    byte-sized psalt at 1, the Python scoring groups land on <= n_cells
+    tasks. The floor makes the live key count cover the cores four
+    times over; at real scale (cells >> cores) it is 1. Purely
+    physical: psalt splits a cell's probes and replicates its base
+    rows, so every (probe, cell) pair is scored exactly once."""
+    return max(1, -(-4 * spark.sparkContext.defaultParallelism // max(1, n_cells)))
+
+
 def knn_join_matmul(
     probes: DataFrame,
     base: DataFrame,
@@ -290,35 +423,31 @@ def knn_join_matmul(
     probe_vec_col: str = "probe_vec",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    max_probes_per_pass: int = MATMUL_MAX_PROBES_PER_PASS,
 ) -> DataFrame:
     """Batched kNN-join for LARGE batches: one mapInPandas pass over
     the base table with every probe in the task closure.
 
-    Per Arrow batch: one matmul scores all rows against all probes
-    (vectorized C instead of one interpreted HOF fold per pair — the
-    pair-join formulation evaluates the lambda 64 times per pair, which
-    measured ~58s for 20 probes x 2M rows), argpartition keeps the
-    batch-local top-k per probe, and ONLY those k*B candidate rows get
-    their distance recomputed with the exact (a-b)^2 formula (so
-    reported distances match the codegen/oracle path bit-for-bit; the
-    matmul form differs by ~1e-12 relative and is used solely for
-    candidate selection, padded 2x against fp-boundary flips). A final
+    Per Arrow batch ``topk_rows`` scores all rows against all probes
+    with one matmul (vectorized C instead of one interpreted HOF fold
+    per pair — the pair-join formulation evaluates the lambda 64 times
+    per pair, which measured ~58s for 20 probes x 2M rows), keeps a
+    tie-safe candidate superset per probe, and recomputes ONLY those
+    rows' distances with the exact (a-b)^2 formula (so reported
+    distances match the codegen/oracle path bit-for-bit). A final
     window ranks k per probe. Squared-Euclidean only.
 
     Base rows never shuffle; output of the map phase is k*B rows per
     partition, so the window input is tiny.
 
     The probe batch rides the task closure, which bounds it: over
-    ``max_probes_per_pass`` probes (default 10^4 — ~5 MB of closure at
+    ``MATMUL_MAX_PROBES_PER_PASS`` probes (10^4 — ~5 MB of closure at
     dim 64, plus the B x batch distance matrix in task memory) the
     probes are CHUNKED into ceil(P/bound) independent map passes whose
     outputs union before the shared window. Each pass re-scans the
     base (chunks x scans total) — for probe sets that large, consider
-    the index-partitioned path (plans/grid_index.knn_join_indexed)
-    instead; the chunking here makes the closure bound enforced rather
-    than documented-only. Results are identical regardless of
-    chunking: each probe's candidate set is computed independently.
+    the index-partitioned path (plans/bulk_knn.knn_join_bulk) instead.
+    Results are identical regardless of chunking: each probe's
+    candidate set is computed independently.
     """
     import pandas as pd
 
@@ -333,71 +462,34 @@ def knn_join_matmul(
             probe_vec_col=probe_vec_col, vec_col=vec_col, id_col=id_col,
         )
     if not probe_rows:
+        # strategy pinned: 'auto' over a many-partition base routes
+        # straight back here
         return knn_join(probes, base, k, probe_id_col=probe_id_col,
-                        probe_vec_col=probe_vec_col, vec_col=vec_col, id_col=id_col)
-    if max_probes_per_pass < 1:
-        raise ValueError("max_probes_per_pass must be >= 1")
+                        probe_vec_col=probe_vec_col, vec_col=vec_col,
+                        id_col=id_col, strategy="window")
     all_pids = np.array([r[0] for r in probe_rows], dtype=np.int64)
     all_P = np.stack([np.asarray(list(r[1]), dtype=np.float64) for r in probe_rows])
-    keep = min(2 * k, 10**9)  # fp-boundary padding for candidate selection
     src = base.select(id_col, vec_col)
 
-    def scored_chunk(all_chunk_pids: np.ndarray, all_chunk_P: np.ndarray) -> DataFrame:
+    def scored_chunk(pids: np.ndarray, P: np.ndarray) -> DataFrame:
         def fn(batches):
             for pdf in batches:
                 if not len(pdf):
                     continue
-                M = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                all_ids = pdf[id_col].to_numpy()
-                # sub-chunk so the D matrix stays bounded per task
-                step = adaptive_probe_chunk(len(all_ids), len(all_chunk_pids))
-                for plo in range(0, len(all_chunk_pids), step):
-                    pids = all_chunk_pids[plo : plo + step]
-                    P = all_chunk_P[plo : plo + step]
-                    p_sq = (P**2).sum(axis=1)
-                    nb = len(pids)
-                    ids = all_ids
-                    m_sq = (M**2).sum(axis=1)
-                    D = m_sq[:, None] - 2.0 * (M @ P.T) + p_sq[None, :]
-                    kk = min(keep, len(ids))
-                    thr = (
-                        matmul_tie_thresholds(
-                            D, kk, M.shape[1], float(m_sq.max()), p_sq
-                        )
-                        if kk < len(ids)
-                        else None
-                    )
-                    out_pid, out_id, out_dist = [], [], []
-                    for bi in range(nb):
-                        rows = (
-                            np.nonzero(D[:, bi] <= thr[bi])[0]
-                            if thr is not None
-                            else np.arange(len(ids))
-                        )
-                        exact = ((M[rows] - P[bi][None, :]) ** 2).sum(axis=1)
-                        # truncate the tie-widened set back to kk by
-                        # (exact, id) — same contract as knn_join_blocks
-                        # / knn_join_bulk. Without this, duplicate-heavy
-                        # corpora emit every boundary-tied row (ADVICE
-                        # r8: thousands per probe per batch), breaking
-                        # the "map output is k*B rows" invariant the
-                        # final window's input size relies on.
-                        order = np.lexsort((ids[rows], exact))[:kk]
-                        out_pid.extend([pids[bi]] * len(order))
-                        out_id.extend(ids[rows[order]].tolist())
-                        out_dist.extend(exact[order].tolist())
-                    yield pd.DataFrame(
-                        {probe_id_col: out_pid, id_col: out_id, "dist": out_dist}
-                    )
+                pi, ids, dist = topk_rows(
+                    stack_vectors(pdf[vec_col]), pdf[id_col].to_numpy(), P, k,
+                    "euclidean_sq",
+                )
+                yield pd.DataFrame({probe_id_col: pids[pi], id_col: ids, "dist": dist})
 
         return src.mapInPandas(
             fn, f"{probe_id_col} long, {id_col} long, dist double"
         )
 
+    bound = MATMUL_MAX_PROBES_PER_PASS
     chunks = [
-        scored_chunk(all_pids[i : i + max_probes_per_pass],
-                     all_P[i : i + max_probes_per_pass])
-        for i in range(0, len(all_pids), max_probes_per_pass)
+        scored_chunk(all_pids[i : i + bound], all_P[i : i + bound])
+        for i in range(0, len(all_pids), bound)
     ]
     scored = chunks[0]
     for extra in chunks[1:]:
@@ -452,7 +544,6 @@ def knn_join_blocks(
     id_col: str = "vec_id",
     n_base_blocks: int | None = None,
     n_probe_blocks: int | None = None,
-    probe_chunk: int = 4_096,
     **metric_kwargs,
 ) -> DataFrame:
     """Fully distributed exact brute kNN-join: block nested loop via
@@ -507,7 +598,6 @@ def knn_join_blocks(
     else:
         P, B = block_grid(probes.count(), base.count(), par)
     inv_diag = metric_kwargs.get("inv_diag")
-    keep_pad = 2 * k
 
     probes_x = (
         probes.select(probe_id_col, probe_vec_col)
@@ -524,88 +614,19 @@ def knn_join_blocks(
         ))
     )
 
-    out_schema = f"{probe_id_col} long, {id_col} long, dist double"
-
     def score(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if not len(left) or not len(right):
             return pd.DataFrame({probe_id_col: [], id_col: [], "dist": []})
-        M = np.stack(right[vec_col].to_numpy()).astype(np.float64)
-        ids = right[id_col].to_numpy().astype(np.int64)
-        n = len(ids)
-        kk = min(k, n)
-        pids = left[probe_id_col].to_numpy()
-        P_all = np.stack(left[probe_vec_col].to_numpy()).astype(np.float64)
-        # base-row norms for the cosine gemm selection: computed once
-        # per (pblk, bblk) task, shared across every probe chunk
-        m_norm = (
-            np.sqrt((M**2).sum(axis=1))
-            if metric == "cosine" and n > keep_pad
-            else None
+        pi, ids, dist = topk_rows(
+            stack_vectors(right[vec_col]), right[id_col].to_numpy(),
+            stack_vectors(left[probe_vec_col]), k, metric, inv_diag=inv_diag,
         )
-        o_pid, o_id, o_dist = [], [], []
-        step = adaptive_probe_chunk(n, probe_chunk)
-        for lo in range(0, len(pids), step):
-            Pm = P_all[lo : lo + step]
-            if metric == "euclidean_sq" and n > keep_pad:
-                m_sq = (M**2).sum(axis=1)
-                p_sq = (Pm**2).sum(axis=1)
-                D = m_sq[:, None] - 2.0 * (M @ Pm.T) + p_sq[None, :]
-                thr = matmul_tie_thresholds(
-                    D, keep_pad, M.shape[1], float(m_sq.max()), p_sq
-                )
-                for bi in range(len(Pm)):
-                    rows = np.nonzero(D[:, bi] <= thr[bi])[0]
-                    exact = np_dists(metric, M[rows], Pm[bi])
-                    order = np.lexsort((ids[rows], exact))[:kk]
-                    o_pid.extend([int(pids[lo + bi])] * len(order))
-                    o_id.extend(ids[rows[order]].tolist())
-                    o_dist.extend(exact[order].tolist())
-            elif metric == "cosine" and n > keep_pad:
-                # one gemm scores the whole chunk (the per-probe
-                # np_dists fallback below re-reads M once PER PROBE:
-                # measured 1600s for the 10^5-probe x 1M-row filtered
-                # comparator in PROBE_SWEEP_r10_fcos_base1M vs 313s
-                # for the euclidean gemm path on the identical tiling)
-                p_norm = np.sqrt((Pm**2).sum(axis=1))
-                D = 1.0 - (M @ Pm.T) / (m_norm[:, None] * p_norm[None, :])
-                thr = cosine_tie_thresholds(D, keep_pad, M.shape[1])
-                for bi in range(len(Pm)):
-                    rows = np.nonzero(D[:, bi] <= thr[bi])[0]
-                    if len(rows) < kk:
-                        # zero-norm rows score NaN in the gemm form and
-                        # fail the <= cut; the exact path would keep
-                        # them (NaN sorts last) — fall back to the full
-                        # scan for this probe so both paths agree
-                        rows = np.arange(n)
-                    exact = np_dists(metric, M[rows], Pm[bi])
-                    order = np.lexsort((ids[rows], exact))[:kk]
-                    o_pid.extend([int(pids[lo + bi])] * len(order))
-                    o_id.extend(ids[rows[order]].tolist())
-                    o_dist.extend(exact[order].tolist())
-            else:
-                for bi in range(len(Pm)):
-                    exact = np_dists(metric, M, Pm[bi], inv_diag=inv_diag)
-                    order = np.lexsort((ids, exact))[:kk]
-                    o_pid.extend([int(pids[lo + bi])] * len(order))
-                    o_id.extend(ids[order].tolist())
-                    o_dist.extend(exact[order].tolist())
-        return pd.DataFrame({probe_id_col: o_pid, id_col: o_id, "dist": o_dist})
+        pids = left[probe_id_col].to_numpy()[pi]
+        return pd.DataFrame({probe_id_col: pids, id_col: ids, "dist": dist})
 
-    # explicit co-partitioning on the block keys: exempt from AQE's
-    # byte-based partition coalescing, which cannot see the matmul
-    # kernels' CPU cost and packs the P x B scoring groups onto a few
-    # tasks when the tiles are small on the wire (same finding as
-    # plans/ann_join's cogroup). Same keys/count on both sides, so it
-    # replaces the planner's implicit exchanges one-for-one.
-    n_shuf = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200") or 200),
-    )
-    scored = (
-        probes_x.repartition(n_shuf, "__pblk", "__bblk")
-        .groupBy("__pblk", "__bblk")
-        .cogroup(base_x.repartition(n_shuf, "__pblk", "__bblk").groupBy("__pblk", "__bblk"))
-        .applyInPandas(score, out_schema)
+    scored = cogroup_apply(
+        probes_x, base_x, ["__pblk", "__bblk"], score,
+        f"{probe_id_col} long, {id_col} long, dist double",
     )
     # asc_nulls_last, not asc: Arrow maps the kernel's NaN distances
     # (cosine on zero-norm rows) to NULL, and Spark's default

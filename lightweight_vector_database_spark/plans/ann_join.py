@@ -78,6 +78,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.distance import cosine_distance, metric_expr
+from ..operators.knn import cogroup_apply, psalt_floor
 from ..operators.similarity import fold_matvec
 
 DEFAULT_SALT_CODES = 262_144
@@ -558,27 +559,8 @@ def ann_join_topk(
                 F.lit(None).cast("long").alias("rank"),
             ).filter(F.lit(False))
         )
-    # psalt floor (guide §2.5 "too few distinct partitioning keys"): the
-    # cogroup's distinct key count is Σ cells (nsalt x nps); when only a
-    # handful of cells are probed (small nprobe, small fixtures) and the
-    # byte-sized nps stays 1, the Python ADC kernels land on <= n_cells
-    # tasks — and AQE's BYTE-based coalescing shrinks that further
-    # because it cannot see per-row Python cost (profiled: the 10^4-probe
-    # ladder ran its 5.2s scoring stage on 6 tasks of 32 cores). Floor
-    # the per-cell probe-group count so the live key count covers the
-    # cluster several times over; at real scale (cells >> cores) the
-    # floor is 1 and nothing changes. Purely physical: psalt splits a
-    # cell's PROBES and replicates its codes, so every (probe, cell)
-    # scoring pair exists exactly once regardless of nps.
-    live_cand_cells = sum(
-        1 for c in cand_counts if code_stats.get(c, 0) > 0
-    )
-    nps_floor = max(
-        1,
-        -(
-            -4 * spark.sparkContext.defaultParallelism
-            // max(1, live_cand_cells)
-        ),
+    nps_floor = psalt_floor(
+        spark, sum(1 for c in cand_counts if code_stats.get(c, 0) > 0)
     )
     cell_map = F.broadcast(
         spark.createDataFrame(
@@ -732,26 +714,7 @@ def ann_join_topk(
              "__esc": o_esc}
         )
 
-    # explicit co-partitioning on the cogroup keys: a user repartition
-    # satisfies the cogroup's required distribution (same keys, same
-    # count), replacing the planner's implicit exchanges one-for-one —
-    # and unlike those it is exempt from AQE partition coalescing,
-    # which sizes post-shuffle partitions by BYTES and so packs the
-    # CPU-heavy Python scoring groups onto a few tasks when the
-    # candidate relation is small on the wire (profiled above). Target
-    # = the session's shuffle parallelism, never less than the core
-    # count — identical to pre-AQE behavior at any real scale.
-    n_shuf = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200") or 200),
-    )
-    grp = [cell_col, "salt", "psalt"]
-    scored = (
-        cand.repartition(n_shuf, *grp)
-        .groupBy(*grp)
-        .cogroup(coded.repartition(n_shuf, *grp).groupBy(*grp))
-        .applyInPandas(score, out_schema)
-    )
+    scored = cogroup_apply(cand, coded, [cell_col, "salt", "psalt"], score, out_schema)
 
     # ---- 4. global candidate cut (salting-independent, per-probe budget) ----
     wc = Window.partitionBy(probe_id_col).orderBy(

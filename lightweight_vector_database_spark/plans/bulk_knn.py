@@ -1,11 +1,7 @@
 """Distributed batched kNN-join: probe tables never touch the driver.
 
-The r6 batched paths (operators/knn.knn_join_matmul and
-plans/grid_index.knn_join_indexed) collect the probe set on the driver
-and ship it through task closures — fine at 10^4 probes, but the probe
-side is then bounded by driver RAM, the exact bottleneck class this
-engine exists to remove. This module is the DataFrame-native path: the
-probe table stays a DataFrame end to end.
+The probe table stays a DataFrame end to end, so the probe side is
+bounded by the cluster, not by driver RAM.
 
 Plan shape (``knn_join_bulk``):
 
@@ -22,21 +18,20 @@ Plan shape (``knn_join_bulk``):
    probe table. The task closure carries only the index *metadata* —
    the GridIndex geometry plus the per-cell row counts — which is
    O(non-empty cells), independent of both table sizes. Per probe the
-   task computes the same count-weighted kth-smallest farthest-corner
-   bound as ``knn_join_indexed`` (identical numerics: it calls the
-   same ``lower_bound_dists`` / ``upper_bound_dists``) and emits one
-   row per (probe, candidate cell, salt).
+   task computes the count-weighted kth-smallest farthest-corner
+   bound (the box formulas of ``GridIndex.lower_bound_dists`` /
+   ``upper_bound_dists``, batched) and emits one row per (probe,
+   candidate cell, salt).
 2. **Base pruning via semi-join.** The base table is semi-joined
    against the distinct candidate cells (a broadcast of O(cells)
    rows) — on a cell-partitioned snapshot this is dynamic partition
    pruning, so non-candidate cells are never scanned. No cell list is
    ever collected to the driver.
 3. **Scoring via cogrouped matmul.** Candidates and base rows cogroup
-   on (cell, salt); each group scores its probes against its base rows
-   with one numpy product per probe chunk (candidate selection), then
-   recomputes the exact left-fold formula for the kept rows so
-   distances match the codegen/oracle path bit-for-bit (same contract
-   as knn_join_matmul). Pair rows are never materialized.
+   on (cell, salt, psalt); each group scores its probes against its
+   base rows with ``operators.knn.topk_rows`` (the kernel every exact
+   join shares), so distances match the codegen/oracle path
+   bit-for-bit. Pair rows are never materialized.
 4. **Salting for hot cells** (the clustered-probe skew case): a cell
    holding more than ``salt_rows`` base rows is split into
    ceil(count / salt_rows) salt buckets — base rows hash into one
@@ -70,14 +65,15 @@ from pyspark.sql import functions as F
 from ..operators.knn import (
     NP_METRICS,
     block_grid,
-    matmul_tie_thresholds,
-    np_dists,
+    cogroup_apply,
+    psalt_floor,
+    stack_vectors,
+    topk_rows,
 )
 from .grid_index import GridIndex, index_stats
 
 
 DEFAULT_SALT_ROWS = 50_000
-DEFAULT_PROBE_CHUNK = 4_096
 # max probe-candidate rows per cogroup key (the probe-side salt): each
 # applyInPandas group materializes as one Arrow buffer, so this times
 # (vector bytes) bounds the probe half of task memory (~9 MB at dim 64)
@@ -122,7 +118,6 @@ def knn_join_bulk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     salt_rows: int = DEFAULT_SALT_ROWS,
-    probe_chunk: int = DEFAULT_PROBE_CHUNK,
     probe_group_rows: int = DEFAULT_PROBE_GROUP_ROWS,
     futility_ratio: float = 0.5,
     **metric_kwargs,
@@ -132,10 +127,9 @@ def knn_join_bulk(
     probe, distances in the metric's native units, id tie-break.
 
     ``assigned`` must carry the index's ``cell_id`` column
-    (build_index/assign_cells). Identical results to
-    ``knn_join_indexed`` and the brute ``knn_join`` (tested at 10^5+
-    probes); unlike those, never materializes a probe vector on the
-    driver.
+    (build_index/assign_cells). Identical results to the brute
+    ``knn_join`` (tested at 10^5+ probes); never materializes a probe
+    vector on the driver.
     """
     # imported per call: tests patch operators.knn.knn_join_blocks to
     # observe the routing
@@ -398,18 +392,7 @@ def knn_join_bulk(
             probe_vec_col=probe_vec_col, vec_col=vec_col, id_col=id_col,
             n_probe_blocks=P, n_base_blocks=B, **metric_kwargs,
         )
-    # psalt floor (guide §2.5 "too few distinct partitioning keys"):
-    # with few candidate cells and byte-sized npsalt at 1, the Python
-    # scoring cogroup has <= n_cells distinct keys and lands on a
-    # handful of tasks (same finding as plans/ann_join — see the floor
-    # comment there). Splitting a cell's probes across more psalt
-    # buckets is purely physical: every (probe, cell) pair is scored
-    # exactly once either way. At real scale (cells >> cores) the
-    # floor is 1.
-    nps_floor = max(
-        1,
-        -(-4 * spark.sparkContext.defaultParallelism // max(1, len(cand_counts))),
-    )
+    nps_floor = psalt_floor(spark, len(cand_counts))
     npsalt = {
         c: max(min(nps_floor, cnt), -(-cnt // probe_group_rows))
         for c, cnt in cand_counts.items()
@@ -448,9 +431,6 @@ def knn_join_bulk(
     cand = cand.join(pvecs, probe_id_col)
 
     # ---- 3. cogrouped matmul scoring ----------------------------------
-    out_schema = f"{probe_id_col} long, {id_col} long, dist double, __kth_ub double"
-    keep_pad = 2 * k  # fp-boundary padding for matmul candidate selection
-
     def score(left, right):
         import pandas as pd
 
@@ -458,66 +438,18 @@ def knn_join_bulk(
             return pd.DataFrame(
                 {probe_id_col: [], id_col: [], "dist": [], "__kth_ub": []}
             )
-        M = np.stack(right[vec_col].to_numpy()).astype(np.float64)
-        ids = right[id_col].to_numpy().astype(np.int64)
-        n = len(ids)
-        kk = min(k, n)
-        pids = left[probe_id_col].to_numpy()
-        ubs = left["__kth_ub"].to_numpy()
-        P_all = np.stack(left[probe_vec_col].to_numpy()).astype(np.float64)
-        o_pid, o_id, o_dist, o_ub = [], [], [], []
-        from ..operators.knn import adaptive_probe_chunk
-
-        step = adaptive_probe_chunk(n, probe_chunk)
-        for lo in range(0, len(pids), step):
-            P = P_all[lo : lo + step]
-            if metric == "euclidean_sq" and n > keep_pad:
-                # matmul candidate selection + exact recompute (same
-                # numerics contract as knn_join_matmul); tie-safe cut
-                # via matmul_tie_thresholds (ADVICE r7)
-                m_sq = (M**2).sum(axis=1)
-                p_sq = (P**2).sum(axis=1)
-                D = m_sq[:, None] - 2.0 * (M @ P.T) + p_sq[None, :]
-                thr = matmul_tie_thresholds(
-                    D, keep_pad, M.shape[1], float(m_sq.max()), p_sq
-                )
-                for bi in range(len(P)):
-                    rows = np.nonzero(D[:, bi] <= thr[bi])[0]
-                    exact = np_dists(metric, M[rows], P[bi])
-                    order = np.lexsort((ids[rows], exact))[:kk]
-                    keep_rows = rows[order]
-                    o_pid.extend([int(pids[lo + bi])] * len(order))
-                    o_id.extend(ids[keep_rows].tolist())
-                    o_dist.extend(exact[order].tolist())
-                    o_ub.extend([float(ubs[lo + bi])] * len(order))
-            else:
-                for bi in range(len(P)):
-                    exact = np_dists(metric, M, P[bi], inv_diag=inv_diag)
-                    order = np.lexsort((ids, exact))[:kk]
-                    o_pid.extend([int(pids[lo + bi])] * len(order))
-                    o_id.extend(ids[order].tolist())
-                    o_dist.extend(exact[order].tolist())
-                    o_ub.extend([float(ubs[lo + bi])] * len(order))
-        return pd.DataFrame(
-            {probe_id_col: o_pid, id_col: o_id, "dist": o_dist, "__kth_ub": o_ub}
+        pi, ids, dist = topk_rows(
+            stack_vectors(right[vec_col]), right[id_col].to_numpy(),
+            stack_vectors(left[probe_vec_col]), k, metric, inv_diag=inv_diag,
         )
+        return pd.DataFrame({
+            probe_id_col: left[probe_id_col].to_numpy()[pi], id_col: ids,
+            "dist": dist, "__kth_ub": left["__kth_ub"].to_numpy()[pi],
+        })
 
-    # explicit co-partitioning on the cogroup keys — exempt from AQE's
-    # byte-based partition coalescing, which cannot see the Python
-    # kernels' CPU cost and packs them onto a few tasks when the
-    # candidate relation is small on the wire (see plans/ann_join for
-    # the profiled case). Same key set and count on both sides, so it
-    # replaces the planner's implicit exchanges one-for-one.
-    n_shuf = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200") or 200),
-    )
-    grp = ["cell_id", "salt", "psalt"]
-    scored = (
-        cand.repartition(n_shuf, *grp)
-        .groupBy(*grp)
-        .cogroup(base.repartition(n_shuf, *grp).groupBy(*grp))
-        .applyInPandas(score, out_schema)
+    scored = cogroup_apply(
+        cand, base, ["cell_id", "salt", "psalt"], score,
+        f"{probe_id_col} long, {id_col} long, dist double, __kth_ub double",
     )
 
     # ---- 4. global top-k ----------------------------------------------
@@ -529,10 +461,12 @@ def knn_join_bulk(
     )
 
     # ---- 5. per-probe validation + brute redo -------------------------
-    # same contract as knn_join_indexed: count + bound containment,
-    # checked as window aggregates over the already probe-partitioned
-    # result; bad probes (clamped out-of-bounds vectors) re-answered by
-    # the exact distributed brute join via an anti-join.
+    # a probe's answer is provably exact iff it has min(k, total) rows
+    # and its max distance stays within its kth upper bound, checked as
+    # window aggregates over the already probe-partitioned result; bad
+    # probes (clamped out-of-bounds vectors) are re-answered by the
+    # exact distributed brute join via an anti-join (a probe with ZERO
+    # result rows is absent from the good set, so it lands there too).
     wp = Window.partitionBy(probe_id_col)
     validated = result.withColumn("__cnt", F.count(F.lit(1)).over(wp)).withColumn(
         "__maxd", F.max("dist").over(wp)

@@ -37,7 +37,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.distance import METRIC_CELL_BOUNDS, metric_expr
+from ..functions.distance import METRIC_CELL_BOUNDS
 from ..operators.knn import knn
 
 
@@ -592,8 +592,8 @@ def knn_indexed(
         # the O(k) materialization here is intentional, not a scale
         # hazard: a single-probe kNN result IS k rows (k ~ 10), and the
         # validation (count + bound containment) needs those rows on
-        # the driver anyway. The batched many-probe path (knn_join_*)
-        # validates distributedly instead — see knn_join_indexed below.
+        # the driver anyway. The batched many-probe path
+        # (bulk_knn.knn_join_bulk) validates distributedly instead.
         out = knn(
             assigned.filter(F.col("cell_id").isin(sorted(cell_set))),
             probe,
@@ -741,168 +741,3 @@ def update_stats(
             if out[cid] <= 0:
                 del out[cid]  # empty cells vanish (reference :132-138)
     return out
-
-
-def knn_join_indexed(
-    assigned: DataFrame,
-    index: GridIndex,
-    probes: DataFrame,
-    k: int,
-    metric: str = "euclidean_sq",
-    stats: dict[int, int] | None = None,
-    probe_id_col: str = "probe_id",
-    probe_vec_col: str = "probe_vec",
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    **metric_kwargs,
-) -> DataFrame:
-    """Batched exact kNN-join through the index: ONE scan serves every
-    probe (the batched analogue of ``knn_indexed``; the batch mode is
-    what beats the reference head-to-head, BASELINE.md).
-
-    Per probe the driver derives a sound candidate-cell set from the
-    index metadata (cells whose box lower bound <= the count-weighted
-    kth-smallest farthest-corner distance — at least k rows lie within
-    that bound, so no outside cell can hold a top-k row). The union of
-    (probe, cell) pairs becomes a broadcast join against the assigned
-    table: each base row is scored only against probes whose candidate
-    set contains its cell — cells outside every probe's candidate set
-    are never scanned (partition pruning via the cell join key), and
-    the per-row probe fan-out is bounded by the candidate overlap, not
-    the batch size.
-
-    Results are validated per probe (row count + bound containment)
-    and invalid probes (clamped out-of-bounds rows, or metadata preds)
-    are re-answered with the exact brute-force join — same fallback
-    contract as ``knn_indexed``.
-    """
-    from ..operators.knn import knn_join
-    from pyspark.sql import Window
-
-    spark = assigned.sparkSession
-    if not GridIndex.supports(metric):
-        return knn_join(probes, assigned, k, metric=metric,
-                        probe_id_col=probe_id_col, probe_vec_col=probe_vec_col,
-                        vec_col=vec_col, id_col=id_col)
-    # driver-memory guard: probe tables too big to materialize route to
-    # the fully distributed bulk path (bulk_knn.knn_join_bulk — probes
-    # never leave the cluster; identical results, tested)
-    from ..operators.knn import MATMUL_MAX_DRIVER_PROBES
-
-    probe_rows = probes.select(probe_id_col, probe_vec_col).limit(
-        MATMUL_MAX_DRIVER_PROBES + 1
-    ).collect()
-    if len(probe_rows) > MATMUL_MAX_DRIVER_PROBES:
-        from .bulk_knn import knn_join_bulk
-
-        return knn_join_bulk(
-            assigned, index, probes, k, metric=metric, stats=stats,
-            probe_id_col=probe_id_col, probe_vec_col=probe_vec_col,
-            vec_col=vec_col, id_col=id_col, **metric_kwargs,
-        )
-    if not probe_rows:
-        empty = knn_join(probes, assigned, k, metric=metric,
-                         probe_id_col=probe_id_col, probe_vec_col=probe_vec_col,
-                         vec_col=vec_col, id_col=id_col)
-        return empty
-    if stats is None:
-        stats = index_stats(assigned)
-    if not stats:
-        return knn_join(probes, assigned, k, metric=metric,
-                        probe_id_col=probe_id_col, probe_vec_col=probe_vec_col,
-                        vec_col=vec_col, id_col=id_col)
-
-    cells = np.array(sorted(stats), dtype=np.int64)
-    counts = np.array([stats[c] for c in cells.tolist()], dtype=np.int64)
-    total = int(counts.sum())
-
-    pairs: list[tuple] = []
-    kth_ubs: dict = {}
-    for r in probe_rows:
-        pid, pvec = r[0], list(r[1])
-        lb = index.lower_bound_dists(pvec, cells, metric, **metric_kwargs)
-        ub = index.upper_bound_dists(pvec, cells, metric, **metric_kwargs)
-        order_ub = np.argsort(ub, kind="stable")
-        cum_ub = counts[order_ub].cumsum()
-        kth_ub = (
-            float(ub[order_ub[int(np.searchsorted(cum_ub, k))]])
-            if cum_ub[-1] >= k
-            else float("inf")
-        )
-        kth_ubs[pid] = kth_ub
-        mask = lb <= kth_ub
-        pairs.extend(
-            (pid, int(c), pvec) for c in cells[mask].tolist()
-        )
-
-    union_cells = sorted({c for _, c, _ in pairs})
-    cand_base = assigned.filter(F.col("cell_id").isin(union_cells))
-    if metric == "euclidean_sq":
-        # score via the matmul map-side path over the UNION of all
-        # probes' candidate cells (a superset per probe — still exact,
-        # per-probe validation below unchanged). The pair-join form
-        # evaluates an interpreted HOF per (row, probe); the matmul
-        # form is one numpy product per Arrow batch.
-        from ..operators.knn import knn_join_matmul
-
-        result = knn_join_matmul(
-            probes, cand_base, k, probe_id_col=probe_id_col,
-            probe_vec_col=probe_vec_col, vec_col=vec_col, id_col=id_col,
-        )
-    else:
-        pair_df = spark.createDataFrame(
-            pairs, f"{probe_id_col} long, cell_id long, {probe_vec_col} array<double>"
-        )
-        scored = (
-            assigned.join(F.broadcast(pair_df), "cell_id")
-            .withColumn(
-                "dist",
-                metric_expr(metric, vec_col, F.col(probe_vec_col), **metric_kwargs),
-            )
-            .select(probe_id_col, id_col, "dist")
-        )
-        w = Window.partitionBy(probe_id_col).orderBy(
-            F.col("dist").asc(), F.col(id_col).asc()
-        )
-        result = scored.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
-        )
-    # Distributed per-probe validation: a probe's indexed answer is
-    # provably exact iff it has min(k, total) rows AND its max distance
-    # stays within the probe's count-weighted kth upper bound (clamped
-    # out-of-bounds rows can violate either). The checks run as window
-    # aggregates over the result plan itself — the result is already
-    # hash-partitioned by probe_id from the top-k window, so no extra
-    # shuffle — and the (tiny) per-probe bound table is broadcast. Bad
-    # probes are re-answered by the exact brute join via an anti-join
-    # (a probe with ZERO result rows is caught too: absent from the
-    # good set => lands in the redo set). Nothing is collected; callers
-    # get a live plan with full lineage (VERDICT r4 item 2).
-    bounds_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, ub) for pid, ub in kth_ubs.items()],
-            f"{probe_id_col} long, __kth_ub double",
-        )
-    )
-    need = min(k, total)
-    wp = Window.partitionBy(probe_id_col)
-    validated = (
-        result.withColumn("__cnt", F.count(F.lit(1)).over(wp))
-        .withColumn("__maxd", F.max("dist").over(wp))
-        .join(bounds_df, probe_id_col)
-    )
-    ok = (F.col("__cnt") >= F.lit(need)) & (
-        F.col("__maxd") <= F.col("__kth_ub")
-    )
-    good = validated.filter(ok).select(*result.columns)
-    good_ids = validated.filter(ok).select(probe_id_col).distinct()
-    redo = probes.join(good_ids, probe_id_col, "left_anti")
-    # strategy pinned to 'partial' (map-side top-k, no driver collect):
-    # the 'auto' matmul path collects the probe batch eagerly, which
-    # would force this whole plan to execute at construction time. The
-    # redo set is empty in the common case — AQE's empty-relation
-    # propagation then skips the base scan entirely.
-    exact = knn_join(redo, assigned, k, metric=metric,
-                     probe_id_col=probe_id_col, probe_vec_col=probe_vec_col,
-                     vec_col=vec_col, id_col=id_col, strategy="partial")
-    return good.unionByName(exact.select(*result.columns))

@@ -339,14 +339,14 @@ register("ann_pq_refined", _ann_pq, _PQ_ORACLE)
 # the brute-force join) ------------------------------------------------------
 
 def _knn_join_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..plans.grid_index import knn_join_indexed
+    from ..plans.bulk_knn import knn_join_bulk
 
     assigned, stats = _indexed_snapshot(spark, sf_dir)
     probes = assigned.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("probe_id"),
         F.col("embedding").cast("array<double>").alias("probe_vec"),
     )
-    out = knn_join_indexed(assigned, _INDEX, probes, k=3, stats=stats)
+    out = knn_join_bulk(assigned, _INDEX, probes, k=3, stats=stats)
     return out.select(
         "probe_id",
         "vec_id",

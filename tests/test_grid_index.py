@@ -171,112 +171,6 @@ def test_update_stats_incremental(spark, indexed):
     assert new_stats == truth
 
 
-def test_knn_join_indexed_matches_brute(spark, sf_dir):
-    from lightweight_vector_database_spark.operators.knn import knn_join
-    from lightweight_vector_database_spark.plans.grid_index import (
-        build_index,
-        knn_join_indexed,
-    )
-    from lightweight_vector_database_spark.probes import probe_vector
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = GridIndex([-0.5] * DIM, [0.5] * DIM, num_splits=2, depth=6)
-    assigned = build_index(emb, idx)
-    probes = spark.createDataFrame(
-        [(i, [float(x) for x in probe_vector(seed=40 + i)]) for i in range(6)],
-        "probe_id long, probe_vec array<double>",
-    )
-    brute = {
-        (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
-        for r in knn_join(probes, emb, 5).collect()
-    }
-    idx = {
-        (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
-        for r in knn_join_indexed(assigned, idx, probes, 5).collect()
-    }
-    assert idx == brute
-
-
-def test_knn_join_indexed_returns_live_plan_no_result_collect(
-    spark, sf_dir, monkeypatch
-):
-    # VERDICT r4 item 2: the batched join must NOT round-trip its
-    # result through the driver (collect + createDataFrame cut lineage
-    # and move |probes|*k rows through the driver per call). Pin it:
-    # constructing the plan performs exactly ONE collect — the probe
-    # batch needed for driver-side candidate-cell derivation — and the
-    # returned DataFrame is a live plan whose execution matches brute.
-    import pyspark.sql.classic.dataframe as cdf
-
-    from lightweight_vector_database_spark.operators.knn import knn_join
-    from lightweight_vector_database_spark.plans.grid_index import (
-        knn_join_indexed,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    idx = GridIndex([-0.5] * DIM, [0.5] * DIM, num_splits=2, depth=6)
-    assigned = build_index(emb, idx)
-    stats = index_stats(assigned)
-    probes = spark.createDataFrame(
-        [(i, [float(x) for x in probe_vector(seed=60 + i)]) for i in range(4)],
-        "probe_id long, probe_vec array<double>",
-    )
-
-    calls: list[int] = []
-    real_collect = cdf.DataFrame.collect
-
-    def counting_collect(self):
-        calls.append(1)
-        return real_collect(self)
-
-    monkeypatch.setattr(cdf.DataFrame, "collect", counting_collect)
-    out = knn_join_indexed(assigned, idx, probes, 4, stats=stats)
-    # <= 2 probe-batch collects (candidate derivation + matmul closure),
-    # both bounded by |probes|. The old driver-side validation added a
-    # third collect of the |probes|*k RESULT — that must stay gone.
-    assert len(calls) <= 2, (
-        f"plan construction ran {len(calls)} collects (want <=2: probe batch only)"
-    )
-    monkeypatch.setattr(cdf.DataFrame, "collect", real_collect)
-
-    brute = {
-        (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
-        for r in knn_join(probes, emb, 4).collect()
-    }
-    got = {
-        (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
-        for r in out.collect()
-    }
-    assert got == brute
-
-
-def test_knn_join_indexed_redo_path_exact_with_clamped_rows(spark, sf_dir):
-    # Bounds much tighter than the data -> most rows clamp into edge
-    # cells, the per-probe validation fails, and the distributed
-    # anti-join redo must still produce the exact brute answer.
-    from lightweight_vector_database_spark.operators.knn import knn_join
-    from lightweight_vector_database_spark.plans.grid_index import (
-        knn_join_indexed,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    tight = GridIndex([-0.05] * DIM, [0.05] * DIM, num_splits=2, depth=4)
-    assigned = build_index(emb, tight)
-    probes = spark.createDataFrame(
-        [(i, [float(x) for x in probe_vector(seed=70 + i)]) for i in range(3)],
-        "probe_id long, probe_vec array<double>",
-    )
-    brute = {
-        (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
-        for r in knn_join(probes, emb, 5).collect()
-    }
-    got = {
-        (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
-        for r in knn_join_indexed(assigned, tight, probes, 5).collect()
-    }
-    assert got == brute
-
-
 def test_upper_bounds_are_valid_for_inbounds_rows(indexed):
     # farthest-corner bound must dominate the true max distance of a
     # cell's IN-BOUNDS rows (clamped rows are documented exceptions —

@@ -113,6 +113,41 @@ def test_knn_wrong_dim_probe_raises(spark, sf_dir):
         knn(df, [0.0] * 32, 5).collect()
 
 
+@pytest.mark.parametrize("path", ["window", "partial", "matmul", "blocks"])
+def test_knn_join_wrong_dim_probe_raises(spark, path):
+    # the pair paths used to return (probe, id, NULL, rank) rows from
+    # zip_with's null padding; the numpy kernel failed with a bare
+    # broadcasting error
+    from lightweight_vector_database_spark.operators.knn import knn_join_blocks
+
+    base = spark.createDataFrame(
+        [(i, [float(i), 0.0, 1.0]) for i in range(3)],
+        "vec_id long, embedding array<double>",
+    )
+    probes = spark.createDataFrame(
+        [(0, [0.0, 0.0])], "probe_id long, probe_vec array<double>"
+    )
+    if path == "blocks":
+        out = knn_join_blocks(probes, base, 3, n_probe_blocks=1, n_base_blocks=1)
+    else:
+        out = knn_join(probes, base, 3, strategy=path)
+    with pytest.raises(Exception, match="probe dim"):
+        out.collect()
+
+
+def test_knn_join_auto_empty_probes_returns_no_rows(spark):
+    # over 8 base partitions 'auto' routes euclidean_sq to
+    # knn_join_matmul, whose empty-probe fallback used to call
+    # knn_join('auto') again: unbounded recursion, one collect per level
+    base = spark.range(240, numPartitions=12).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.col("id").cast("double"), F.lit(0.0)).alias("embedding"),
+    )
+    assert base.rdd.getNumPartitions() > 8
+    probes = spark.createDataFrame([], "probe_id long, probe_vec array<double>")
+    assert knn_join(probes, base, 3).collect() == []
+
+
 def test_knn_join_matmul_matches_window(spark, sf_dir):
     from lightweight_vector_database_spark.operators.knn import (
         knn_join,
@@ -137,10 +172,13 @@ def test_knn_join_matmul_matches_window(spark, sf_dir):
     assert mm == ref  # exact distances recomputed -> bit-identical
 
 
-def test_knn_join_matmul_chunked_matches_window(spark, sf_dir):
-    """Chunking is purely physical: forcing a tiny max_probes_per_pass
-    (many union'd passes) must give results identical to the window
-    path and to the single-pass matmul."""
+def test_knn_join_matmul_chunked_matches_window(spark, sf_dir, monkeypatch):
+    """Chunking is purely physical: forcing a tiny
+    MATMUL_MAX_PROBES_PER_PASS (many union'd passes) must give results
+    identical to the window path and to the single-pass matmul."""
+    import importlib
+
+    knn_mod = importlib.import_module("lightweight_vector_database_spark.operators.knn")
     from lightweight_vector_database_spark.operators.knn import (
         knn_join,
         knn_join_matmul,
@@ -157,55 +195,60 @@ def test_knn_join_matmul_chunked_matches_window(spark, sf_dir):
         (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
         for r in knn_join(probes, emb, 3, strategy="window").collect()
     }
-    chunked = {
-        (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
-        for r in knn_join_matmul(probes, emb, 3, max_probes_per_pass=7).collect()
-    }
     single = {
+        (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
+        for r in knn_join_matmul(probes, emb, 3).collect()
+    }
+    monkeypatch.setattr(knn_mod, "MATMUL_MAX_PROBES_PER_PASS", 7)
+    chunked = {
         (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
         for r in knn_join_matmul(probes, emb, 3).collect()
     }
     assert chunked == ref and single == ref
 
 
-def test_knn_join_matmul_100k_probes_chunks(spark):
-    """The closure bound is ENFORCED, not documented: 10^5 probes run
-    as ceil(P/10^4) = 10 chunked passes and produce the same result as
-    one (explicitly oversized) single pass."""
-    import numpy as np
+def test_knn_join_matmul_100k_probes_chunks(spark, monkeypatch):
+    """The closure bound is ENFORCED, not documented: P probes (under
+    the driver bound, so no routing to the block join) run as
+    ceil(P / MATMUL_MAX_PROBES_PER_PASS) map passes and produce the
+    same result as one pass with the bound lifted."""
+    import importlib
+    import math
 
+    knn_mod = importlib.import_module("lightweight_vector_database_spark.operators.knn")
     from lightweight_vector_database_spark.operators.knn import knn_join_matmul
 
     rng = np.random.default_rng(17)
     dim = 8
     base_rows = [(int(i), rng.standard_normal(dim).tolist()) for i in range(400)]
     base = spark.createDataFrame(base_rows, "vec_id long, embedding array<double>")
-    n_probes = 100_000
+    n_probes = 30_000
+    assert n_probes <= knn_mod.MATMUL_MAX_DRIVER_PROBES
     pv = rng.standard_normal((n_probes, dim))
     probes = spark.createDataFrame(
         [(int(i), pv[i].tolist()) for i in range(n_probes)],
         "probe_id long, probe_vec array<double>",
     )
-    out = knn_join_matmul(probes, base, k=2)  # default bound -> 10 passes
-    got = out.groupBy().agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("probe_id").alias("np"),
-        F.sum(F.col("vec_id") * F.col("rank")).alias("chk"),
-        F.sum("dist").alias("dsum"),
-    ).first()
-    assert got.n == 2 * n_probes and got.np == n_probes
-    # spot-check a probe against the single-pass plan (bound lifted)
-    sub = probes.filter(F.col("probe_id") < 50)
-    a = {
-        (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
-        for r in knn_join_matmul(sub, base, k=2,
-                                 max_probes_per_pass=10**6).collect()
-    }
-    b = {
-        (r.probe_id, r.rank): (r.vec_id, round(r.dist, 9))
-        for r in out.filter(F.col("probe_id") < 50).collect()
-    }
-    assert a == b
+
+    def passes(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count(
+            "MapInPandas"
+        )
+
+    def canon(df):
+        return sorted(
+            (r.probe_id, r["rank"], r.vec_id, r.dist) for r in df.collect()
+        )
+
+    chunked = knn_join_matmul(probes, base, k=2)
+    bound = knn_mod.MATMUL_MAX_PROBES_PER_PASS
+    assert passes(chunked) == math.ceil(n_probes / bound) > 1
+    got = canon(chunked)
+    assert len(got) == 2 * n_probes
+    monkeypatch.setattr(knn_mod, "MATMUL_MAX_PROBES_PER_PASS", n_probes)
+    single = knn_join_matmul(probes, base, k=2)
+    assert passes(single) == 1
+    assert canon(single) == got
 
 
 def test_blocks_cosine_matches_partial(spark):

@@ -32,7 +32,7 @@ EXPECTED_PYTHON = {
     "multimodal_ppm_resize",  # real codec chain: synth -> resize -> re-decode (3 mapInPandas)
     "udtf_repeated_terms",  # true Python UDTF (the op under test IS the Python boundary)
     "ann_ivfpq_refined",  # arrow cell+residual encode (build step); ADC serving is codegen
-    "knn_join_grid_indexed",  # batched matmul strategy (mapInPandas) — the documented high-throughput kNN-join path
+    "knn_join_grid_indexed",  # knn_join_bulk through the grid index: cogrouped numpy scoring (applyInPandas)
     "ann_join_topk",  # batched IVF-PQ: cell-assign mapInPandas + cogrouped ADC (plans/ann_join)
     "ann_join_filtered",  # same boundaries with the predicate pushed to the code tier
     "ann_join_cosine",  # same boundaries over the normalized model (kernel-side probe normalization)
