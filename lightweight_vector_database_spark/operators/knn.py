@@ -415,6 +415,20 @@ def psalt_floor(spark, n_cells: int) -> int:
     return max(1, -(-4 * spark.sparkContext.defaultParallelism // max(1, n_cells)))
 
 
+def psalt_counts(
+    spark, cand_counts: dict[int, int], probe_group_rows: int
+) -> dict[int, int]:
+    """Probe-salt count per cell of ``cand_counts`` (cell -> candidate
+    probe rows): ceil(cnt / probe_group_rows) buckets bound the probe
+    half of each cogroup group, raised to the ``psalt_floor`` over
+    these cells (but never past one bucket per candidate)."""
+    floor = psalt_floor(spark, len(cand_counts))
+    return {
+        c: max(min(floor, cnt), -(-cnt // probe_group_rows))
+        for c, cnt in cand_counts.items()
+    }
+
+
 def knn_join_matmul(
     probes: DataFrame,
     base: DataFrame,

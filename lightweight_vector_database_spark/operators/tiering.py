@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.distance import metric_expr
+from .knn import _dim_checked
 from .retrieval import sq8_train
 
 # preference order: cheapest candidate scan first (packed words are
@@ -181,20 +182,13 @@ def _topk_union(
     pv = F.col("__pv")
 
     if tier == "exact":
-        # dimension guard as in knn(): zip_with null-pads mismatched
+        # the knn() dimension guard: zip_with null-pads mismatched
         # arrays, which would sort nulls FIRST — fail loudly instead
-        guard = F.assert_true(
-            F.size(F.col(vec_col)) == F.size(pv),
-            F.concat(
-                F.lit("probe dim != vector dim "),
-                F.size(F.col(vec_col)).cast("string"),
-            ),
-        )
         dist = metric_expr("euclidean_sq", vec_col, pv)
         scored = (
             df.select(id_col, vec_col)
             .crossJoin(pdf)
-            .withColumn("__d", F.when(guard.isNull(), dist))
+            .withColumn("__d", _dim_checked(dist, vec_col, F.size(pv)))
         )
         out = _topk_per_probe(scored, "__d", k, id_col, n_groups)
     elif tier == "hamming":

@@ -78,7 +78,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.distance import cosine_distance, metric_expr
-from ..operators.knn import cogroup_apply, psalt_floor
+from ..operators.knn import cogroup_apply, psalt_counts
 from ..operators.similarity import fold_matvec
 
 DEFAULT_SALT_CODES = 262_144
@@ -559,22 +559,17 @@ def ann_join_topk(
                 F.lit(None).cast("long").alias("rank"),
             ).filter(F.lit(False))
         )
-    nps_floor = psalt_floor(
-        spark, sum(1 for c in cand_counts if code_stats.get(c, 0) > 0)
+    # only cells holding code rows join (and count toward the floor)
+    npsalt = psalt_counts(
+        spark,
+        {c: n for c, n in cand_counts.items() if code_stats.get(c, 0) > 0},
+        probe_group_rows,
     )
     cell_map = F.broadcast(
         spark.createDataFrame(
             [
-                (
-                    int(c),
-                    max(1, -(-code_stats.get(c, 0) // salt_codes)),
-                    max(
-                        min(nps_floor, cnt),
-                        -(-cnt // probe_group_rows),
-                    ),
-                )
-                for c, cnt in sorted(cand_counts.items())
-                if code_stats.get(c, 0) > 0
+                (int(c), max(1, -(-code_stats[c] // salt_codes)), nps)
+                for c, nps in sorted(npsalt.items())
             ],
             f"{cell_col} int, __nsalt int, __nps int",
         )

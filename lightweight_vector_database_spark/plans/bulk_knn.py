@@ -17,10 +17,11 @@ Plan shape (``knn_join_bulk``):
 1. **Candidate derivation, distributed.** ``mapInPandas`` over the
    probe table. The task closure carries only the index *metadata* —
    the GridIndex geometry plus the per-cell row counts — which is
-   O(non-empty cells), independent of both table sizes. Per probe the
-   task computes the count-weighted kth-smallest farthest-corner
-   bound (the box formulas of ``GridIndex.lower_bound_dists`` /
-   ``upper_bound_dists``, batched) and emits one row per (probe,
+   O(non-empty cells), independent of both table sizes. Per probe
+   chunk the task computes the cell bounds with the grid index's
+   shared functions (``grid_index.box_bounds`` over the hoisted
+   ``cell_boxes``, and ``kth_upper_bounds`` for the count-weighted
+   kth-smallest farthest-corner bound) and emits one row per (probe,
    candidate cell, salt).
 2. **Base pruning via semi-join.** The base table is semi-joined
    against the distinct candidate cells (a broadcast of O(cells)
@@ -66,11 +67,17 @@ from ..operators.knn import (
     NP_METRICS,
     block_grid,
     cogroup_apply,
-    psalt_floor,
+    psalt_counts,
     stack_vectors,
     topk_rows,
 )
-from .grid_index import GridIndex, index_stats
+from .grid_index import (
+    GridIndex,
+    box_bounds,
+    index_stats,
+    kth_upper_bounds,
+    reduce_deviations,
+)
 
 
 DEFAULT_SALT_ROWS = 50_000
@@ -157,47 +164,19 @@ def knn_join_bulk(
     nsalt = np.maximum(1, -(-counts // salt_rows)).astype(np.int64)
     need = min(k, total)
     inv_diag = metric_kwargs.get("inv_diag")
-    inv_diag_arr = (
-        np.asarray(list(inv_diag), dtype=np.float64) if inv_diag is not None else None
-    )
     # per-cell box geometry, computed ONCE on the driver and shipped in
     # the closure (O(cells x dim) doubles — index metadata, independent
     # of either table's size). extended=True is the pruning-valid
     # lower-bound geometry (edge cells stretch to +-inf for clamped
     # points); extended=False is the finite farthest-corner geometry
-    # the count-weighted kth upper bound uses — exactly the arrays
-    # GridIndex.lower/upper_bound_dists derive per probe, hoisted so
-    # the derivation below is pure batched numpy (a per-probe Python
-    # loop measured ~100x slower at 10^6 probes).
+    # the count-weighted kth upper bound uses — the boxes
+    # GridIndex.lower/upper_bound_dists decode per probe, hoisted so
+    # the derivation below is pure batched numpy through the same
+    # grid_index.box_bounds (a per-probe Python loop measured ~100x
+    # slower at 10^6 probes).
     lo_ext, hi_ext = index.cell_boxes(cells.tolist(), extended=True)
     lo_fin, hi_fin = index.cell_boxes(cells.tolist(), extended=False)
     derive_chunk = 256  # bounds tensor is chunk x cells x dim doubles
-
-    def _reduce(t: np.ndarray) -> np.ndarray:
-        """The metric over non-negative per-dim terms (last axis)."""
-        if metric == "euclidean_sq":
-            return (t**2).sum(-1)
-        if metric == "manhattan":
-            return t.sum(-1)
-        if metric == "chebyshev":
-            return t.max(-1)
-        if metric == "mahalanobis_diag":
-            return (inv_diag_arr * t**2).sum(-1)
-        raise KeyError(metric)
-
-    def _bounds(P: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(lb, ub) matrices (probes x cells) for a probe chunk —
-        same box formulas as GridIndex.lower/upper_bound_dists."""
-        gaps = np.maximum(
-            0.0,
-            np.maximum(lo_ext[None, :, :] - P[:, None, :],
-                       P[:, None, :] - hi_ext[None, :, :]),
-        )
-        far = np.maximum(
-            np.abs(lo_fin[None, :, :] - P[:, None, :]),
-            np.abs(hi_fin[None, :, :] - P[:, None, :]),
-        )
-        return _reduce(gaps), _reduce(far)
 
     # ---- 0. futility from geometry alone -------------------------------
     # For a probe inside the index bounds [L, U], a cell's lower bound
@@ -210,9 +189,9 @@ def knn_join_bulk(
     # and its count only reach the block join the grid already implies.
     # Probes outside the bounds may prune; the block join answers them
     # exactly all the same.
-    prunes_nothing = _reduce(
-        np.maximum(lo_fin - index.lower, index.upper - hi_fin)
-    ).max() <= _reduce((hi_fin - lo_fin) / 2).min()
+    prunes_nothing = reduce_deviations(
+        np.maximum(lo_fin - index.lower, index.upper - hi_fin), metric, inv_diag
+    ).max() <= reduce_deviations((hi_fin - lo_fin) / 2, metric, inv_diag).min()
     if prunes_nothing and futility_ratio <= 1:
         n_probes = _probe_count(probes, probe_id_col)
         P, B = block_grid(n_probes, total, spark.sparkContext.defaultParallelism)
@@ -246,26 +225,10 @@ def knn_join_bulk(
             P_all = np.stack(pdf[probe_vec_col].to_numpy()).astype(np.float64)
             for lo in range(0, len(pids), derive_chunk):
                 P = P_all[lo : lo + derive_chunk]
-                lb, ub = _bounds(P)
-                order_ub = np.argsort(ub, axis=1, kind="stable")
-                cum_ub = np.take_along_axis(
-                    np.broadcast_to(counts, ub.shape), order_ub, axis=1
-                ).cumsum(axis=1)
-                # first sorted position where the cumulative count
-                # reaches k (== np.searchsorted(cum, k) per row)
-                pos = (cum_ub < k).sum(axis=1)
-                has_k = cum_ub[:, -1] >= k
-                kth = np.where(
-                    has_k,
-                    np.take_along_axis(
-                        ub,
-                        np.take_along_axis(
-                            order_ub, np.minimum(pos, ub.shape[1] - 1)[:, None], 1
-                        ),
-                        1,
-                    )[:, 0],
-                    np.inf,
-                )
+                # raises on a probe/index dim mismatch
+                lb = box_bounds(P, lo_ext, hi_ext, metric, **metric_kwargs)
+                ub = box_bounds(P, lo_fin, hi_fin, metric, upper=True, **metric_kwargs)
+                kth = kth_upper_bounds(ub, counts, k)
                 mask = lb <= kth[:, None]
                 # vectorized row construction (guide §4.2): the old
                 # per-probe / per-cell / per-salt Python append loop was
@@ -392,11 +355,7 @@ def knn_join_bulk(
             probe_vec_col=probe_vec_col, vec_col=vec_col, id_col=id_col,
             n_probe_blocks=P, n_base_blocks=B, **metric_kwargs,
         )
-    nps_floor = psalt_floor(spark, len(cand_counts))
-    npsalt = {
-        c: max(min(nps_floor, cnt), -(-cnt // probe_group_rows))
-        for c, cnt in cand_counts.items()
-    }
+    npsalt = psalt_counts(spark, cand_counts, probe_group_rows)
     cell_map = F.broadcast(
         spark.createDataFrame(
             [

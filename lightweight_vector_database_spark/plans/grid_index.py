@@ -21,6 +21,13 @@ In Spark the index is a COLUMN, not a structure:
   filter on ``cell_id`` which prunes parquet partitions/row-groups
   when the table is written ``partitionBy('cell_id')``. Exact
   results, verified against brute force.
+- The cell-bound math is written once. ``cell_boxes`` decodes cell ids
+  into per-cell boxes (an ``AdaptiveGridIndex`` overrides it alone, to
+  decode its leaves); ``box_bounds`` reduces the probe-to-box
+  deviations under the metric (``reduce_deviations``) for one probe or
+  a batch; ``kth_upper_bounds`` is the count-weighted kth upper bound.
+  ``knn_indexed``, ``radius_search_indexed`` and the batched
+  ``bulk_knn.knn_join_bulk`` all prune through these.
 
 Out-of-bounds handling differs deliberately: the reference asserts on
 insert (:84-85); we clamp into the edge cells and extend edge-cell
@@ -41,11 +48,11 @@ from ..functions.distance import METRIC_CELL_BOUNDS
 from ..operators.knn import knn
 
 
-# Metrics with a closed-form cell bound (lower_bound_dists /
-# upper_bound_dists). User metrics registered with a ``cell_bounds``
-# callable (register_metric, the analogue of the reference's scipy
-# point2plane blackbox, distance_metric.py:7-19, which prunes ANY
-# metric) also prune, via the box-based dispatch below. Any other
+# Metrics with a closed-form cell bound (reduce_deviations). User
+# metrics registered with a ``cell_bounds`` callable (register_metric,
+# the analogue of the reference's scipy point2plane blackbox,
+# distance_metric.py:7-19, which prunes ANY metric) also prune, via the
+# box-based dispatch in box_bounds. Any other
 # metric is still answerable through the indexed entry points: they
 # detect the missing bound and serve the exact brute scan instead —
 # "no pruning available" degrades to "no pruning", never to an error.
@@ -185,111 +192,37 @@ class GridIndex:
         cells = np.asarray(list(cell_ids), dtype=np.int64)
         digits = self._digits(cells)
         n = len(cells)
-        lo_out = np.empty((n, self.dim), dtype=np.float64)
-        hi_out = np.empty((n, self.dim), dtype=np.float64)
-        for d in range(self.dim):
-            levels = [l for l in range(self.depth) if l % self.dim == d]
-            if not levels:
-                if extended:
-                    lo_out[:, d], hi_out[:, d] = -np.inf, np.inf
-                else:
-                    lo_out[:, d], hi_out[:, d] = self.lower[d], self.upper[d]
-                continue
+        if extended:
+            lo_out = np.full((n, self.dim), -np.inf)
+            hi_out = np.full((n, self.dim), np.inf)
+        else:
+            lo_out = np.tile(self.lower, (n, 1))
+            hi_out = np.tile(self.upper, (n, 1))
+        # level l splits dim l % dim: only the first min(dim, depth)
+        # dims are split, the rest keep the unsplit fill above
+        for d in range(min(self.dim, self.depth)):
+            levels = list(range(d, self.depth, self.dim))
             span = self.upper[d] - self.lower[d]
+            # combine this dim's digits (successive bins-ary refinement)
+            # into one interval [frac_lo, frac_lo + bins^-J) of the range
             frac_lo = np.zeros(n, dtype=np.float64)
             for j, level in enumerate(levels):
                 frac_lo += digits[:, level] * float(self.bins) ** -(j + 1)
-            width = float(self.bins) ** -len(levels)
             lo = self.lower[d] + frac_lo * span
-            hi = lo + width * span
+            hi = lo + float(self.bins) ** -len(levels) * span
             if extended:
-                all_low = np.all(digits[:, levels] == 0, axis=1)
-                all_high = np.all(digits[:, levels] == self.bins - 1, axis=1)
-                lo = np.where(all_low, -np.inf, lo)
-                hi = np.where(all_high, np.inf, hi)
+                lo = np.where(np.all(digits[:, levels] == 0, axis=1), -np.inf, lo)
+                hi = np.where(np.all(digits[:, levels] == self.bins - 1, axis=1), np.inf, hi)
             lo_out[:, d] = lo
             hi_out[:, d] = hi
         return lo_out, hi_out
-
-    def _custom_bounds(
-        self,
-        probe: Sequence[float],
-        cell_ids: Sequence[int],
-        metric: str,
-        which: int,
-        **kwargs,
-    ) -> np.ndarray:
-        """Dispatch to a register_metric cell_bounds callable.
-        which=0 -> lower (inf over the extended box), 1 -> upper (sup
-        over the finite box)."""
-        fn = METRIC_CELL_BOUNDS[metric]
-        p = np.asarray(list(probe), dtype=np.float64)
-        lo, hi = self.cell_boxes(cell_ids, extended=(which == 0))
-        out = np.asarray(fn(p, lo, hi, **kwargs)[which], dtype=np.float64)
-        if out.shape != (len(lo),):
-            raise ValueError(
-                f"cell_bounds for {metric!r} returned shape {out.shape}; "
-                f"expected ({len(lo)},)"
-            )
-        return out
-
-    def upper_bound_dists(
-        self,
-        probe: Sequence[float],
-        cell_ids: Sequence[int],
-        metric: str = "euclidean_sq",
-        inv_diag: Sequence[float] | None = None,
-        **kwargs,
-    ) -> np.ndarray:
-        """Upper bound of metric(probe, x) over each cell's FINITE box
-        (farthest corner). Valid for points inside the declared bounds;
-        clamped out-of-bounds points may exceed it — callers that use
-        this for pruning must verify and fall back (see knn_indexed).
-        """
-        if metric not in BOUNDED_METRICS and metric in METRIC_CELL_BOUNDS:
-            if inv_diag is not None:
-                kwargs["inv_diag"] = inv_diag
-            return self._custom_bounds(probe, cell_ids, metric, 1, **kwargs)
-        p = np.asarray(list(probe), dtype=np.float64)
-        cells = np.asarray(list(cell_ids), dtype=np.int64)
-        digits = self._digits(cells)
-        used_dims = sorted({level % self.dim for level in range(self.depth)})
-        far = np.zeros((len(cells), len(used_dims)), dtype=np.float64)
-        for di, d in enumerate(used_dims):
-            levels = [l for l in range(self.depth) if l % self.dim == d]
-            span = self.upper[d] - self.lower[d]
-            frac_lo = np.zeros(len(cells), dtype=np.float64)
-            for j, level in enumerate(levels):
-                frac_lo += digits[:, level] * float(self.bins) ** -(j + 1)
-            width = float(self.bins) ** -len(levels)
-            lo = self.lower[d] + frac_lo * span
-            hi = lo + width * span
-            far[:, di] = np.maximum(np.abs(lo - p[d]), np.abs(hi - p[d]))
-        # dims never split by the index contribute their full range to
-        # the farthest corner
-        unused = [d for d in range(self.dim) if d not in used_dims]
-        extra = np.zeros(len(unused), dtype=np.float64)
-        for ui, d in enumerate(unused):
-            extra[ui] = max(abs(self.lower[d] - p[d]), abs(self.upper[d] - p[d]))
-        if metric == "euclidean_sq":
-            return (far**2).sum(axis=1) + (extra**2).sum()
-        if metric == "manhattan":
-            return far.sum(axis=1) + extra.sum()
-        if metric == "chebyshev":
-            base = far.max(axis=1) if far.shape[1] else np.zeros(len(cells))
-            return np.maximum(base, extra.max() if len(extra) else 0.0)
-        if metric == "mahalanobis_diag":
-            w = np.asarray(list(inv_diag), dtype=np.float64)
-            return (w[used_dims] * far**2).sum(axis=1) + (w[unused] * extra**2).sum()
-        raise KeyError(f"no closed-form cell bound for metric {metric!r}")
 
     def lower_bound_dists(
         self,
         probe: Sequence[float],
         cell_ids: Sequence[int],
         metric: str = "euclidean_sq",
-        inv_diag: Sequence[float] | None = None,
-        **kwargs,
+        **metric_kwargs,
     ) -> np.ndarray:
         """Exact lower bound of metric(probe, x) over each cell's box —
         the reference's distance_to_partition (:164-181) in closed
@@ -297,41 +230,96 @@ class GridIndex:
         bound; the diagonal-Mahalanobis case mirrors the reference's
         closed-form point2plane specialization, distance_metric.py
         :84-92). Edge cells extend to +-inf (clamped points)."""
-        if metric not in BOUNDED_METRICS and metric in METRIC_CELL_BOUNDS:
-            if inv_diag is not None:
-                kwargs["inv_diag"] = inv_diag
-            return self._custom_bounds(probe, cell_ids, metric, 0, **kwargs)
-        p = np.asarray(list(probe), dtype=np.float64)
-        cells = np.asarray(list(cell_ids), dtype=np.int64)
-        digits = self._digits(cells)
-        used_dims = sorted({level % self.dim for level in range(self.depth)})
-        gaps = np.zeros((len(cells), len(used_dims)), dtype=np.float64)
-        for di, d in enumerate(used_dims):
-            levels = [l for l in range(self.depth) if l % self.dim == d]
-            span = self.upper[d] - self.lower[d]
-            # combine this dim's digits (successive bins-ary refinement)
-            # into one interval [frac_lo, frac_lo + bins^-J) of the range
-            frac_lo = np.zeros(len(cells), dtype=np.float64)
-            for j, level in enumerate(levels):
-                frac_lo += digits[:, level] * float(self.bins) ** -(j + 1)
-            width = float(self.bins) ** -len(levels)
-            lo = self.lower[d] + frac_lo * span
-            hi = lo + width * span
-            all_low = np.all(digits[:, levels] == 0, axis=1)
-            all_high = np.all(digits[:, levels] == self.bins - 1, axis=1)
-            lo = np.where(all_low, -np.inf, lo)
-            hi = np.where(all_high, np.inf, hi)
-            gaps[:, di] = np.maximum(0.0, np.maximum(lo - p[d], p[d] - hi))
-        if metric == "euclidean_sq":
-            return (gaps**2).sum(axis=1)
-        if metric == "manhattan":
-            return gaps.sum(axis=1)
-        if metric == "chebyshev":
-            return gaps.max(axis=1)
-        if metric == "mahalanobis_diag":
-            w = np.asarray(list(inv_diag), dtype=np.float64)
-            return (w[used_dims] * gaps**2).sum(axis=1)
-        raise KeyError(f"no closed-form cell bound for metric {metric!r}")
+        lo, hi = self.cell_boxes(cell_ids, extended=True)
+        return box_bounds(probe, lo, hi, metric, **metric_kwargs)[0]
+
+    def upper_bound_dists(
+        self,
+        probe: Sequence[float],
+        cell_ids: Sequence[int],
+        metric: str = "euclidean_sq",
+        **metric_kwargs,
+    ) -> np.ndarray:
+        """Upper bound of metric(probe, x) over each cell's FINITE box
+        (farthest corner). Valid for points inside the declared bounds;
+        clamped out-of-bounds points may exceed it — callers that use
+        this for pruning must verify and fall back (see knn_indexed).
+        """
+        lo, hi = self.cell_boxes(cell_ids, extended=False)
+        return box_bounds(probe, lo, hi, metric, upper=True, **metric_kwargs)[0]
+
+
+def reduce_deviations(
+    t: np.ndarray, metric: str, inv_diag: Sequence[float] | None = None
+) -> np.ndarray:
+    """A BOUNDED_METRICS metric over non-negative per-dimension
+    deviations ``t`` (reduced along the last axis): the gaps to a box
+    give its lower bound, the farthest-corner distances its upper
+    bound."""
+    if metric == "euclidean_sq":
+        return (t**2).sum(-1)
+    if metric == "manhattan":
+        return t.sum(-1)
+    if metric == "chebyshev":
+        return t.max(-1)
+    if metric == "mahalanobis_diag":
+        return (np.asarray(inv_diag, dtype=np.float64) * t**2).sum(-1)
+    raise KeyError(f"no closed-form cell bound for metric {metric!r}")
+
+
+def box_bounds(
+    probes,
+    lo: np.ndarray,
+    hi: np.ndarray,
+    metric: str,
+    upper: bool = False,
+    **metric_kwargs,
+) -> np.ndarray:
+    """(probes x cells) bounds of metric(probe, x) over the boxes
+    ``lo``/``hi`` (cells x dim, from ``cell_boxes``) for one probe or
+    a batch of probe rows. ``upper=False`` reduces the gaps to the
+    boxes (pass the extended boxes); ``upper=True`` the farthest-corner
+    distances (pass the finite boxes). A metric registered with a
+    ``cell_bounds`` callable (register_metric) is answered by that
+    callable, one probe row at a time."""
+    P = np.atleast_2d(np.asarray(probes, dtype=np.float64))
+    if P.shape[1] != lo.shape[1]:
+        raise ValueError(f"probe dim {P.shape[1]} != index dim {lo.shape[1]}")
+    if metric not in BOUNDED_METRICS and metric in METRIC_CELL_BOUNDS:
+        fn = METRIC_CELL_BOUNDS[metric]
+        out = np.empty((len(P), len(lo)), dtype=np.float64)
+        for i, p in enumerate(P):
+            b = np.asarray(fn(p, lo, hi, **metric_kwargs)[int(upper)], dtype=np.float64)
+            if b.shape != (len(lo),):
+                raise ValueError(
+                    f"cell_bounds for {metric!r} returned shape {b.shape}; "
+                    f"expected ({len(lo)},)"
+                )
+            out[i] = b
+        return out
+    # in place: the (probes x cells x dim) temporaries dominate the cost
+    below = lo[None, :, :] - P[:, None, :]
+    above = P[:, None, :] - hi[None, :, :]
+    if upper:
+        t = np.maximum(np.abs(below, out=below), np.abs(above, out=above), out=below)
+    else:
+        t = np.maximum(np.maximum(below, above, out=below), 0.0, out=below)
+    return reduce_deviations(t, metric, metric_kwargs.get("inv_diag"))
+
+
+def kth_upper_bounds(ub: np.ndarray, counts: np.ndarray, k: int) -> np.ndarray:
+    """Per probe row of ``ub`` (probes x cells), the count-weighted
+    kth-smallest upper bound: walking the cells in stable ``ub`` order,
+    the bound of the first cell where the cumulative row count
+    ``counts`` reaches k — at least k rows lie within it, so it bounds
+    the true kth distance (inf when the cells hold fewer than k)."""
+    order = np.argsort(ub, axis=1, kind="stable")
+    cum = counts[order].cumsum(axis=1)
+    # first sorted position where the cumulative count reaches k
+    # (== np.searchsorted(cum, k) per row)
+    pos = np.minimum((cum < k).sum(axis=1), ub.shape[1] - 1)
+    kth = np.take_along_axis(ub, np.take_along_axis(order, pos[:, None], 1), 1)[:, 0]
+    return np.where(cum[:, -1] >= k, kth, np.inf)
 
 
 class AdaptiveGridIndex(GridIndex):
@@ -349,9 +337,10 @@ class AdaptiveGridIndex(GridIndex):
 
     A leaf is encoded as one long ``prefix_id * 16 + depth`` (depth
     <= 15), so the adaptive cell column is still a single partition
-    key and ``knn_indexed`` / ``radius_search_indexed`` work unchanged:
-    the bound methods decode the depth and delegate to the fixed-depth
-    geometry per depth group.
+    key and ``knn_indexed`` / ``radius_search_indexed`` /
+    ``knn_join_bulk`` work unchanged: ``cell_boxes`` decodes each
+    leaf's depth and delegates to the fixed-depth geometry per depth
+    group, and every bound is computed from those boxes.
 
     Build cost is ONE count-by-cell job at max depth; the prefix-tree
     refinement runs driver-side over non-empty cells only (bounded by
@@ -441,32 +430,19 @@ class AdaptiveGridIndex(GridIndex):
 
     # --- query-side geometry -------------------------------------------
 
-    def _per_depth(self, cell_ids: Sequence[int]):
+    def cell_boxes(
+        self, cell_ids: Sequence[int], extended: bool
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Boxes of encoded leaves: each depth group decodes through
+        the fixed-depth ``GridIndex`` of that depth."""
         codes = np.asarray(list(cell_ids), dtype=np.int64)
-        for d in sorted(set((codes % 16).tolist())):
+        lo = np.empty((len(codes), self.dim), dtype=np.float64)
+        hi = np.empty((len(codes), self.dim), dtype=np.float64)
+        for d in np.unique(codes % 16).tolist():
             mask = codes % 16 == d
-            geo = GridIndex(
-                self.lower, self.upper, num_splits=self.bins - 1, depth=int(d)
-            )
-            yield mask, geo, codes[mask] // 16
-
-    def lower_bound_dists(
-        self, probe, cell_ids, metric: str = "euclidean_sq", **kwargs
-    ) -> np.ndarray:
-        codes = np.asarray(list(cell_ids), dtype=np.int64)
-        out = np.empty(len(codes), dtype=np.float64)
-        for mask, geo, ids in self._per_depth(codes):
-            out[mask] = geo.lower_bound_dists(probe, ids, metric, **kwargs)
-        return out
-
-    def upper_bound_dists(
-        self, probe, cell_ids, metric: str = "euclidean_sq", **kwargs
-    ) -> np.ndarray:
-        codes = np.asarray(list(cell_ids), dtype=np.int64)
-        out = np.empty(len(codes), dtype=np.float64)
-        for mask, geo, ids in self._per_depth(codes):
-            out[mask] = geo.upper_bound_dists(probe, ids, metric, **kwargs)
-        return out
+            geo = GridIndex(self.lower, self.upper, num_splits=self.bins - 1, depth=d)
+            lo[mask], hi[mask] = geo.cell_boxes(codes[mask] // 16, extended)
+        return lo, hi
 
 
 def build_index(
@@ -578,13 +554,7 @@ def knn_indexed(
         )
 
     # geometric bound: count-weighted kth-smallest corner distance
-    order_ub = np.argsort(ub, kind="stable")
-    cum_ub = counts[order_ub].cumsum()
-    kth_ub = (
-        float(ub[order_ub[int(np.searchsorted(cum_ub, k))]])
-        if cum_ub[-1] >= k
-        else float("inf")
-    )
+    kth_ub = float(kth_upper_bounds(ub[None, :], counts, k)[0])
     geo_mask = lb <= kth_ub
     geo_rows = int(counts[geo_mask].sum())
 

@@ -400,3 +400,32 @@ def test_bulk_rejects_duplicate_probe_ids(spark, fixture, futility_ratio):
             assigned, idx, dup, k=3, stats=stats, futility_ratio=futility_ratio
         )
     assert unpersist_caches() == 0
+
+
+@pytest.mark.parametrize("futility_ratio", [0.5, 1.01])
+@pytest.mark.parametrize("probe_dim", [3, 1])
+def test_bulk_rejects_probe_dim_mismatch(spark, probe_dim, futility_ratio):
+    """Probes whose dim differs from a 4-d index's fail with the named
+    bound error inside the candidate derivation, on both routes (the
+    depth-8 grid prunes, so neither ratio takes the geometry route)."""
+    from lightweight_vector_database_spark.caching import unpersist_caches
+
+    base = spark.range(500).select(
+        F.col("id").alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(1), F.lit(4)),
+            lambda i: F.sin(F.col("id").cast("double") * i) * 0.5,
+        ).alias("embedding"),
+    )
+    idx = GridIndex([-0.5] * 4, [0.5] * 4, num_splits=2, depth=8)
+    assigned = build_index(base, idx)
+    probes = spark.range(20).select(
+        F.col("id").alias("probe_id"),
+        F.array_repeat(F.lit(0.1), probe_dim).alias("probe_vec"),
+    )
+    with pytest.raises(Exception, match=f"probe dim {probe_dim} != index dim 4"):
+        knn_join_bulk(
+            assigned, idx, probes, k=3, stats=index_stats(assigned),
+            futility_ratio=futility_ratio,
+        ).collect()
+    unpersist_caches()

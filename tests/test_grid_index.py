@@ -59,10 +59,8 @@ def test_indexed_with_filter(indexed):
     assert got == exact
 
 
-def test_lower_bounds_are_valid(indexed):
+def _check_lower_bounds(idx, assigned, probe):
     # every cell's bound must not exceed the true min distance of its rows
-    emb, idx, assigned, stats = indexed
-    probe = probe_vector(seed=4)
     rows = assigned.select("cell_id", "embedding").collect()
     p = np.asarray(probe)
     true_min: dict[int, float] = {}
@@ -73,6 +71,45 @@ def test_lower_bounds_are_valid(indexed):
     bounds = idx.lower_bound_dists(probe, cells)
     for c, b in zip(cells, bounds):
         assert b <= true_min[c] + 1e-9
+
+
+def _check_upper_bounds(idx, assigned, probe):
+    # farthest-corner bound must dominate the true max distance of a
+    # cell's IN-BOUNDS rows (clamped rows are documented exceptions —
+    # knn_indexed verifies-and-falls-back for those)
+    rows = assigned.select("cell_id", "embedding").collect()
+    p = np.asarray(probe)
+    true_max: dict[int, float] = {}
+    for r in rows:
+        v = np.asarray(r.embedding, dtype=np.float64)
+        if (v < idx.lower).any() or (v > idx.upper).any():
+            continue
+        d = float(((v - p) ** 2).sum())
+        true_max[r.cell_id] = max(true_max.get(r.cell_id, -np.inf), d)
+    assert true_max  # fixture has in-bounds rows
+    cells = sorted(true_max)
+    bounds = idx.upper_bound_dists(probe, cells)
+    for c, b in zip(cells, bounds):
+        assert true_max[c] <= b + 1e-9
+
+
+def test_lower_bounds_are_valid(indexed):
+    emb, idx, assigned, stats = indexed
+    _check_lower_bounds(idx, assigned, probe_vector(seed=4))
+
+
+def test_indexed_rejects_probe_dim_mismatch(indexed):
+    """A probe whose dim differs from the index's fails on the driver
+    with a named error, before any scan (the shared box_bounds)."""
+    from lightweight_vector_database_spark.plans.grid_index import (
+        radius_search_indexed,
+    )
+
+    emb, idx, assigned, stats = indexed
+    with pytest.raises(ValueError, match=f"probe dim 3 != index dim {DIM}"):
+        knn_indexed(assigned, idx, [0.0] * 3, 5, stats=stats)
+    with pytest.raises(ValueError, match=f"probe dim 3 != index dim {DIM}"):
+        radius_search_indexed(assigned, idx, [0.0] * 3, 1.0, stats=stats)
 
 
 def test_out_of_bounds_point_is_found(spark, indexed):
@@ -172,25 +209,8 @@ def test_update_stats_incremental(spark, indexed):
 
 
 def test_upper_bounds_are_valid_for_inbounds_rows(indexed):
-    # farthest-corner bound must dominate the true max distance of a
-    # cell's IN-BOUNDS rows (clamped rows are documented exceptions —
-    # knn_indexed verifies-and-falls-back for those)
     emb, idx, assigned, stats = indexed
-    probe = probe_vector(seed=8)
-    rows = assigned.select("cell_id", "embedding").collect()
-    p = np.asarray(probe)
-    true_max: dict[int, float] = {}
-    for r in rows:
-        v = np.asarray(r.embedding, dtype=np.float64)
-        if (v < -0.5).any() or (v > 0.5).any():
-            continue
-        d = float(((v - p) ** 2).sum())
-        true_max[r.cell_id] = max(true_max.get(r.cell_id, -np.inf), d)
-    assert true_max  # fixture has in-bounds rows
-    cells = sorted(true_max)
-    bounds = idx.upper_bound_dists(probe, cells)
-    for c, b in zip(cells, bounds):
-        assert true_max[c] <= b + 1e-9
+    _check_upper_bounds(idx, assigned, probe_vector(seed=8))
 
 
 def test_custom_metric_falls_back(indexed):
@@ -400,6 +420,59 @@ class TestAdaptiveIndex:
             for r in knn_indexed(assigned, aidx, probe, 10, stats=stats).collect()
         ]
         assert got == exact
+
+    @pytest.mark.parametrize("probe", [[0.32] * DIM4, [-0.2, 0.1, 0.4, -0.45]])
+    def test_lower_bounds_are_valid(self, skewed, probe):
+        # leaf boxes at every depth, inside and away from the hot blob
+        df, aidx, assigned, stats, pts = skewed
+        _check_lower_bounds(aidx, assigned, probe)
+
+    @pytest.mark.parametrize("probe", [[0.32] * DIM4, [-0.2, 0.1, 0.4, -0.45]])
+    def test_upper_bounds_are_valid_for_inbounds_rows(self, skewed, probe):
+        df, aidx, assigned, stats, pts = skewed
+        _check_upper_bounds(aidx, assigned, probe)
+
+    def test_bulk_join_equals_bruteforce(self, spark):
+        """knn_join_bulk over an adaptive index decodes the encoded
+        leaves (prefix * 16 + depth) into their real boxes: with boxes
+        decoded as max-depth cells, its candidate cut dropped true
+        neighbours and the per-probe check, which trusts the same
+        boxes, let them through."""
+        from lightweight_vector_database_spark.operators.knn import knn_join
+        from lightweight_vector_database_spark.plans.bulk_knn import knn_join_bulk
+        from lightweight_vector_database_spark.plans.grid_index import (
+            AdaptiveGridIndex,
+        )
+
+        rng = np.random.RandomState(0)
+        n = 3000
+        blob = 0.3 + 0.03 * rng.standard_normal((n // 2, 2))
+        flat = rng.uniform(-1.0, 1.0, (n - n // 2, 2))
+        pts = np.clip(np.vstack([blob, flat]), -0.999, 0.999)
+        df = spark.createDataFrame(
+            [(i, pts[i].tolist()) for i in range(n)],
+            "vec_id long, embedding array<double>",
+        )
+        aidx = AdaptiveGridIndex(
+            [-1.0, -1.0], [1.0, 1.0], num_splits=2, max_depth=8, max_leaf_size=32
+        )
+        assigned, stats = aidx.assign(df)
+        assert len({leaf % 16 for leaf in stats}) > 1  # leaves at several depths
+        probes = spark.createDataFrame(
+            [(i, rng.uniform(-1.0, 1.0, 2).tolist()) for i in range(200)],
+            "probe_id long, probe_vec array<double>",
+        )
+
+        def canon(out):
+            return sorted(
+                (r.probe_id, r.vec_id, round(r.dist, 9)) for r in out.collect()
+            )
+
+        bulk = knn_join_bulk(
+            assigned, aidx, probes, 3, stats=stats, futility_ratio=1.01
+        )
+        brute = knn_join(probes, df, 3, strategy="window")
+        assert canon(bulk) == canon(brute)
 
 
 def test_custom_metric_with_cell_bounds_prunes(spark, monkeypatch):
