@@ -1037,17 +1037,15 @@ def embedding_srp_pairs(
     # vector values (norms hoisted per-row — see
     # cosine_distance_prenormed).
     #
-    # The explicit repartition pins the pair-distinct exchange at
-    # cluster parallelism: AQE's byte-based coalescing would otherwise
-    # fold the tiny (id, id, hamming) rows onto one task and serialize
-    # the per-pair interpreted cosine that follows (same failure mode
-    # as the ANN cogroup fix, OPTIMIZATION_r12.md). Partitioning by
-    # (id1, id2) — a subset of the distinct key — satisfies the
-    # aggregate's required distribution, so no extra exchange appears.
-    par = max(
-        df.sparkSession.sparkContext.defaultParallelism,
-        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")),
-    )
+    # The explicit repartition pins the pair-distinct exchange at one
+    # partition per core (defaultParallelism): AQE's byte-based
+    # coalescing would otherwise fold the tiny (id, id, hamming) rows
+    # onto one task and serialize the per-pair interpreted cosine that
+    # follows (same failure mode as the ANN cogroup fix,
+    # OPTIMIZATION_r12.md). Partitioning by (id1, id2) — a subset of
+    # the distinct key — satisfies the aggregate's required
+    # distribution, so no extra exchange appears.
+    par = df.sparkSession.sparkContext.defaultParallelism
     pairs = (
         a.join(b, ["band", "key"])
         .filter(F.col("id1") < F.col("id2"))

@@ -374,8 +374,23 @@ def topk_rows(
     )
 
 
+# Bytes of cogrouped input one task may sort before scoring. The
+# cogroup sorts each whole partition in the JVM, so at one partition
+# per core every core's task holds its share of the relation at once:
+# in a local[8] session the bulk join of 125k dim-64 probes over 64
+# unpruned cells (about 4 GB of candidate vectors) drove the JVM
+# past 14 GB resident, where a fixed 32-way width peaked at 8.7 GB and
+# this bound at 7.8 GB.
+COGROUP_TASK_BYTES = 128 << 20
+
+
 def cogroup_apply(
-    left: DataFrame, right: DataFrame, keys: Sequence[str], fn, schema: str
+    left: DataFrame,
+    right: DataFrame,
+    keys: Sequence[str],
+    fn,
+    schema: str,
+    nbytes: int = 0,
 ) -> DataFrame:
     """``left`` and ``right`` cogrouped on ``keys`` through ``fn``
     (applyInPandas), explicitly co-partitioned on the keys.
@@ -387,13 +402,16 @@ def cogroup_apply(
     post-shuffle partitions by BYTES and so packs CPU-heavy Python
     scoring groups onto a few tasks when the inputs are small on the
     wire (profiled: the 10^4-probe ANN ladder ran its 5.2s scoring
-    stage on 6 tasks of 32 cores). Target = the session's shuffle
-    parallelism, never less than the core count.
+    stage on 6 tasks of 32 cores). Target = one partition per core
+    (``defaultParallelism``): more would only add near-empty Python
+    tasks, each paying a worker round trip. ``nbytes``, the caller's
+    estimate of both sides' shuffled bytes from metadata it already
+    holds, raises the count so no task sorts more than
+    ``COGROUP_TASK_BYTES``.
     """
-    spark = left.sparkSession
     n_shuf = max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200") or 200),
+        left.sparkSession.sparkContext.defaultParallelism,
+        -(-nbytes // COGROUP_TASK_BYTES),
     )
     return (
         left.repartition(n_shuf, *keys)

@@ -541,12 +541,18 @@ def ann_join_topk(
     # sizing + the broadcast cell prune) and code count per cell
     # (code-side salt sizing). Same memory-bound argument as
     # plans/bulk_knn step 2.
-    cand_counts = {
-        int(r[cell_col]): int(r["cnt"])
-        for r in cand.groupBy(cell_col)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
+    # the first action over the persist: a failure in it (the cosine
+    # zero-norm probe check in assign) must not leave it cached
+    try:
+        cand_counts = {
+            int(r[cell_col]): int(r["cnt"])
+            for r in cand.groupBy(cell_col)
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
+        }
+    except BaseException:
+        cand.unpersist()
+        raise
     if not cand_counts:
         cand.unpersist()
         # same (long, long, double, long) schema as the normal path
@@ -565,12 +571,16 @@ def ann_join_topk(
         {c: n for c, n in cand_counts.items() if code_stats.get(c, 0) > 0},
         probe_group_rows,
     )
+    # through Arrow, as in plans/bulk_knn: a LocalRelation leaf, not a
+    # parallelized list whose broadcast runs a Python-worker job
+    import pandas as pd
+
+    map_cells = sorted(npsalt)
+    nsalt = [max(1, -(-code_stats[c] // salt_codes)) for c in map_cells]
+    nps = [npsalt[c] for c in map_cells]
     cell_map = F.broadcast(
         spark.createDataFrame(
-            [
-                (int(c), max(1, -(-code_stats[c] // salt_codes)), nps)
-                for c, nps in sorted(npsalt.items())
-            ],
+            pd.DataFrame({cell_col: map_cells, "__nsalt": nsalt, "__nps": nps}),
             f"{cell_col} int, __nsalt int, __nps int",
         )
     )
@@ -709,7 +719,16 @@ def ann_join_topk(
              "__esc": o_esc}
         )
 
-    scored = cogroup_apply(cand, coded, [cell_col, "salt", "psalt"], score, out_schema)
+    # bytes each side ships, from the counts above: probe vectors
+    # replicate across their cell's salts, m-byte codes across its psalts
+    nbytes = sum(
+        cand_counts[c] * ns * 8 * m * dsub + code_stats[c] * ps * m
+        for c, ns, ps in zip(map_cells, nsalt, nps)
+    )
+    scored = cogroup_apply(
+        cand, coded, [cell_col, "salt", "psalt"], score, out_schema,
+        nbytes=nbytes,
+    )
 
     # ---- 4. global candidate cut (salting-independent, per-probe budget) ----
     wc = Window.partitionBy(probe_id_col).orderBy(

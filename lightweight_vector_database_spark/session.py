@@ -1,10 +1,15 @@
 """SparkSession factory with scale-oriented defaults.
 
-Local tests run on ``local[$SPARK_GRAFT_CPUS]`` (default 32) but every
-config here is chosen to also make sense on a multi-executor cluster:
-AQE on (runtime re-plan: coalesce shuffle partitions, skew-join
-splitting, broadcast conversion), Arrow for any pandas-UDF boundary,
-and a shuffle-partition count sized for the local fixture scale.
+Local sessions run on ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs
+this process may run on) but every config here is chosen to also make
+sense on a multi-executor cluster: AQE on (runtime re-plan: coalesce
+shuffle partitions, skew-join splitting, broadcast conversion), Arrow
+for any pandas-UDF boundary, and one shuffle partition per core.
+
+This is the only engine module that names
+``spark.sql.shuffle.partitions``; operators that pin a shuffle's width
+against AQE coalescing size it by ``defaultParallelism``, which equals
+it here.
 """
 
 from __future__ import annotations
@@ -19,11 +24,23 @@ def get_spark(
     cpus: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """``extra_conf`` entries are applied last (e.g.
+    """A ``local[cpus]`` session with ``cpus`` shuffle partitions.
+
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS``, else to the CPUs this
+    process may run on (its affinity mask, which a container or
+    ``taskset`` narrows below the machine's count). Sizing the shuffle
+    to the cores keeps each Python scoring stage at one task per core
+    instead of many near-empty ones.
+
+    ``extra_conf`` entries are applied last (e.g.
     ``{"spark.scheduler.mode": "FAIR"}`` for serve/maintenance pool
     isolation — like driver memory, scheduler mode only takes effect
     at JVM launch, so it must ride the builder, not a live session)."""
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = (
+        cpus
+        or os.environ.get("SPARK_GRAFT_CPUS")
+        or str(len(os.sched_getaffinity(0)))
+    )
     # local mode: driver == executors, so driver memory IS the cluster
     # memory; the 1g default OOMs at a few million rows x 32 threads.
     # Must be set before the JVM launches (no effect on a live session).
@@ -32,7 +49,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.driver.memory", mem)
-        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # InferFiltersFromGenerate synthesizes `size(e) > 0 AND

@@ -256,6 +256,8 @@ def test_cosine_zero_norm_probe_raises(spark):
     )
     from py4j.protocol import Py4JJavaError
 
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
     with pytest.raises(Exception, match="non-zero probe") as ei:
         ann_join_topk(
             codes, cents, books, probes, raw=emb, k=3, metric="cosine"
@@ -263,6 +265,8 @@ def test_cosine_zero_norm_probe_raises(spark):
     assert "zero-norm probe ids: [0]" in str(ei.value) or isinstance(
         ei.value, Py4JJavaError
     )
+    # the failed call released its persisted probe->cell assignment
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_cell_snapshot_recovers_from_crash_leftovers(spark, tmp_path, monkeypatch):

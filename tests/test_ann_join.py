@@ -153,6 +153,23 @@ def test_output_independent_of_salting(spark, model, probes):
     assert a == b and len(a) == 100 * 5
 
 
+def test_plan_reads_no_python_rdd(spark, model, probes):
+    """The broadcast cell map is an Arrow ``LocalRelation``: a
+    ``LogicalRDD`` leaf (a parallelized Python list) costs a job of
+    Python-worker tasks to broadcast."""
+    from lightweight_vector_database_spark.caching import unpersist_caches
+
+    emb, cents, books, codes = model
+    out = ann_join_topk(
+        codes, cents, books, probes.filter(F.col("probe_id") < 100),
+        raw=emb, k=5, nprobe=4, refine=4,
+    )
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    assert out.count() == 100 * 5
+    unpersist_caches()
+
+
 def test_empty_probes_and_validation(spark, model):
     emb, cents, books, codes = model
     empty = spark.createDataFrame(

@@ -423,9 +423,30 @@ def test_bulk_rejects_probe_dim_mismatch(spark, probe_dim, futility_ratio):
         F.col("id").alias("probe_id"),
         F.array_repeat(F.lit(0.1), probe_dim).alias("probe_vec"),
     )
+    stats = index_stats(assigned)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
     with pytest.raises(Exception, match=f"probe dim {probe_dim} != index dim 4"):
         knn_join_bulk(
-            assigned, idx, probes, k=3, stats=index_stats(assigned),
+            assigned, idx, probes, k=3, stats=stats,
             futility_ratio=futility_ratio,
         ).collect()
+    # the failed call released its probe projection and candidates
+    assert jsc.getPersistentRDDs().size() == before
+    unpersist_caches()
+
+
+def test_bulk_plan_reads_no_python_rdd(spark, fixture):
+    """The cogroup route's broadcast cell map is an Arrow
+    ``LocalRelation``: a ``LogicalRDD`` leaf (a parallelized Python
+    list) costs a job of Python-worker tasks to broadcast."""
+    from lightweight_vector_database_spark.caching import unpersist_caches
+
+    emb, idx, assigned, stats, probes = fixture
+    out = knn_join_bulk(
+        assigned, idx, probes, k=3, stats=stats, futility_ratio=1.01
+    )
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    assert _canon(out) == _canon(knn_join(probes, emb, k=3, strategy="window"))
     unpersist_caches()
